@@ -2955,7 +2955,7 @@ def oracle_sql() -> dict[str, str]:
                   from df left join bfn on df.sh = bfn.sh)
             select doc_id,
                    count(*) as n_shingles,
-                   sum(hit) as n_contaminated
+                   cast(sum(hit) as bigint) as n_contaminated
             from j group by doc_id
         """,
         "x14_html_to_text": f"""

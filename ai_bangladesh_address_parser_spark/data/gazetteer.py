@@ -176,33 +176,55 @@ CURATED_POSTAL_CODES: list[tuple[str, str, str]] = [
 ]
 
 
+def local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Constant Python rows as a DataFrame planned as a JVM ``LocalRelation``.
+
+    ``createDataFrame(<list>)`` pickles the rows into a ``PythonRDD``,
+    so every scan or broadcast of the frame is a Spark job whose tasks
+    start Python workers just to unpickle constant data. An Arrow table
+    is shipped to the JVM once; below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default, the largest dim here is well under 1 MB) Spark keeps it as
+    a ``LocalRelation``, so reading it starts no Python worker at all.
+    pyarrow is imported here, not at module import, so session set-up
+    does not pay for it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), struct)
+
+
 def district_division_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DISTRICT_DIVISION, "district string, division string")
+    return local_df(spark, DISTRICT_DIVISION, "district string, division string")
 
 
 def district_variants_df(spark: SparkSession) -> DataFrame:
     rows = sorted(set(DISTRICT_VARIANTS))
-    return spark.createDataFrame(rows, "variant string, district string")
+    return local_df(spark, rows, "variant string, district string")
 
 
 def areas_df(spark: SparkSession) -> DataFrame:
     from . import dims
 
-    return spark.createDataFrame(dims.AREAS, "area string, district string, postal_code string")
+    return local_df(spark, dims.AREAS, "area string, district string, postal_code string")
 
 
 def area_variants_df(spark: SparkSession) -> DataFrame:
     from . import dims
 
     rows = sorted(set(dims.AREA_VARIANTS))
-    return spark.createDataFrame(rows, "variant string, area string")
+    return local_df(spark, rows, "variant string, area string")
 
 
 def postal_codes_df(spark: SparkSession) -> DataFrame:
     from . import dims
 
-    return spark.createDataFrame(
-        dims.POSTAL_CODES, "code string, district string, post_office string")
+    return local_df(
+        spark, dims.POSTAL_CODES, "code string, district string, post_office string")
 
 
 DISTRICT_TO_DIVISION = dict(DISTRICT_DIVISION)

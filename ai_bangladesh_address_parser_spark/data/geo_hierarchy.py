@@ -20,7 +20,10 @@ module provides
     ``spark.read.json`` and explodes them into the three flat dims
     (tested equal to the constant-backed dims below),
   * constant-backed dims ``upazilas_df`` / ``unions_df`` /
-    ``villages_df`` for operators and DuckDB oracles (no file I/O).
+    ``villages_df`` for operators and DuckDB oracles: no file I/O, and
+    built through ``gazetteer.local_df``, so each plans as a JVM
+    ``LocalRelation`` that a scan or broadcast reads without starting
+    a Python worker.
 
 All names/codes are synthetic or public administrative geography.
 """
@@ -33,7 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .gazetteer import DISTRICT_DIVISION, DISTRICT_TO_DIVISION
+from .gazetteer import DISTRICT_DIVISION, DISTRICT_TO_DIVISION, local_df
 
 # Flat constants — the ground truth the loader must reproduce; built at
 # reference density (598/3,215/2,974) in dims.py, toy rows as a prefix.
@@ -49,15 +52,15 @@ VILLAGE_SCHEMA = ("name string, union_name string, upazila string, district stri
 
 
 def upazilas_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(UPAZILAS, UPAZILA_SCHEMA)
+    return local_df(spark, UPAZILAS, UPAZILA_SCHEMA)
 
 
 def unions_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(UNIONS, UNION_SCHEMA)
+    return local_df(spark, UNIONS, UNION_SCHEMA)
 
 
 def villages_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(VILLAGES, VILLAGE_SCHEMA)
+    return local_df(spark, VILLAGES, VILLAGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -106,6 +106,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..data.gazetteer import local_df
 from ..operators.blocking import blocking_keys, candidate_pairs
 from ..operators.cluster import connected_components
 from ..operators.scoring import attach_pair_components, score_pairs
@@ -237,7 +238,7 @@ class IncrementalLinker:
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             # state written by a pre-edges layout: repair has nothing to
             # work from; treat as empty rather than failing reads
-            return self.spark.createDataFrame([], _EDGE_SCHEMA)
+            return local_df(self.spark, [], _EDGE_SCHEMA)
         return self.spark.read.parquet(path)
 
     @staticmethod

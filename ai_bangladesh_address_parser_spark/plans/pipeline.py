@@ -29,6 +29,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..data.gazetteer import local_df
 from ..functions.normalize import norm_key_expr, normalize_expr
 from ..functions.signal import address_signal_expr, split_fold_terms
 
@@ -285,8 +286,8 @@ class LinkagePlan:
             return df.filter(base)
         from ..operators.extract import _token_candidates
 
-        ov = F.broadcast(self.spark.createDataFrame(
-            [(t,) for t in overflow], "variant string"))
+        ov = F.broadcast(local_df(
+            self.spark, [(t,) for t in overflow], "variant string"))
         passed = df.filter(base)
         rest = df.filter(~base)
         hit = (

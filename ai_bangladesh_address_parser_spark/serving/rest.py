@@ -33,6 +33,7 @@ from __future__ import annotations
 import json
 import threading
 import time
+from collections import deque
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -62,6 +63,7 @@ def extract_texts(
     """
     from pyspark.sql import functions as F
 
+    from ..data.gazetteer import local_df
     from ..functions.country import country_expr
     from ..functions.normalize import normalize_expr
     from ..functions.script import script_cols
@@ -70,7 +72,7 @@ def extract_texts(
     from ..reference_semantics import ALL_COMPONENTS
 
     rows = [(str(i), t if isinstance(t, str) else "") for i, t in enumerate(texts)]
-    base = spark.createDataFrame(rows, schema="mention_id string, text string")
+    base = local_df(spark, rows, "mention_id string, text string")
     mentions = base.select(
         "mention_id", normalize_expr(F.col("text")).alias("normalized")
     )
@@ -164,6 +166,9 @@ class AddressService:
         # design exists for (requests/batch ≫ 1 under concurrency)
         self.n_batches = 0
         self.n_batched_requests = 0
+        # wall seconds of the most recent batch drains (bounded: the
+        # service is long-lived)
+        self.drain_s: deque[float] = deque(maxlen=1024)
         self._queue: list[_Pending] = []
         self._lock = threading.Lock()
         self._stop = threading.Event()
@@ -247,6 +252,7 @@ class AddressService:
                 continue
             self.n_batches += 1
             self.n_batched_requests += len(batch)
+            t0 = time.time()
             try:
                 results = extract_texts(
                     self.spark,
@@ -257,6 +263,9 @@ class AddressService:
                 )
             except Exception as e:  # D4 error isolation: never kill serving
                 results = [self._error_result(p.address, str(e)) for p in batch]
+            # recorded before any waiter wakes, so a caller that has its
+            # result also sees the drain that produced it
+            self.drain_s.append(time.time() - t0)
             for p, r in zip(batch, results):
                 p.result = r
                 p.event.set()

@@ -41,14 +41,42 @@ GOLDEN = [
 
 
 @pytest.fixture(scope="module")
-def extracted(spark):
+def golden_evidence(spark):
+    """(input, evidence) frames over the golden addresses."""
     df = spark.createDataFrame(
         [(f"m{i:03d}", addr) for i, (addr, _) in enumerate(GOLDEN)],
         ["mention_id", "text"],
     ).withColumn("normalized", normalize_expr("text"))
-    ev = extract_evidence(df)
-    wide = resolved_wide(resolve_evidence(ev))
+    return df, extract_evidence(df)
+
+
+@pytest.fixture(scope="module")
+def extracted(golden_evidence):
+    wide = resolved_wide(resolve_evidence(golden_evidence[1]))
     return {r["mention_id"]: r.asDict() for r in wide.collect()}
+
+
+def _python_rdd_leaves(df):
+    """Optimized-plan ExistingRDD leaves that are not local checkpoints:
+    frames built from Python-side data, whose every scan is a job of
+    Python workers."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaf for leaf in (leaves.apply(i) for i in range(leaves.size()))
+            if leaf.getClass().getSimpleName() == "LogicalRDD"
+            and not leaf.rdd().isLocallyCheckpointed()]
+
+
+def test_evidence_battery_scans_no_python_backed_dim(golden_evidence):
+    """Plan lint: over a Python-list input, the only non-checkpoint
+    ExistingRDD scan in ``extract_evidence``'s optimized plan is the
+    input's own. No gazetteer or geo dim reaches the battery as a
+    pickled RDD (they are LocalRelations, see gazetteer.local_df)."""
+    mentions, evidence = golden_evidence
+    own = {leaf.rdd().id() for leaf in _python_rdd_leaves(mentions)}
+    assert len(own) == 1
+    extra = [leaf.output().toString() for leaf in _python_rdd_leaves(evidence)
+             if leaf.rdd().id() not in own]
+    assert not extra, f"Python-backed scans in the evidence battery: {extra}"
 
 
 def test_component_accuracy(extracted):

@@ -16,7 +16,11 @@ from ai_bangladesh_address_parser_spark.operators.extract import (
 def test_geo_json_roundtrip(spark, tmp_path):
     """S3 scan: nested division JSON (both reference shape variants,
     struct and plain-string villages) explodes to dims identical to the
-    constant-backed tables."""
+    constant-backed tables, and each of the 8 constant-backed dims
+    returns its constants row for row, order and nulls included."""
+    from ai_bangladesh_address_parser_spark.data import dims as dm
+    from ai_bangladesh_address_parser_spark.data import gazetteer as gz
+
     files = gh.write_division_files(str(tmp_path))
     assert len(files) == 8
     dims = gh.load_geo_dims(spark, str(tmp_path))
@@ -25,6 +29,18 @@ def test_geo_json_roundtrip(spark, tmp_path):
                         ("villages", gh.villages_df(spark))]:
         assert {tuple(r) for r in dims[name].collect()} == \
             {tuple(r) for r in const.collect()}, name
+    for build, rows in [
+        (gz.district_division_df, gz.DISTRICT_DIVISION),
+        (gz.district_variants_df, sorted(set(gz.DISTRICT_VARIANTS))),
+        (gz.areas_df, dm.AREAS),
+        (gz.area_variants_df, sorted(set(dm.AREA_VARIANTS))),
+        (gz.postal_codes_df, dm.POSTAL_CODES),
+        (gh.upazilas_df, gh.UPAZILAS),
+        (gh.unions_df, gh.UNIONS),
+        (gh.villages_df, gh.VILLAGES),
+    ]:
+        assert [tuple(r) for r in build(spark).collect()] == [tuple(r) for r in rows], \
+            build.__name__
 
 
 def test_geo_invariants():

@@ -11,6 +11,7 @@ regression that row-level tests cannot see.
 Plans are analyzed+optimized but never executed, so the whole module is
 cheap (~seconds) and runs over every oracled driver query.
 """
+import glob
 import io
 import os
 import sys
@@ -42,9 +43,14 @@ def _oracled_queries():
 
 
 @pytest.fixture(scope="module")
-def plans(spark, sf_dir):
+def frames(spark, sf_dir):
     qs = entry_mod.queries()
-    return {name: plan_str(qs[name](spark, sf_dir)) for name in _oracled_queries()}
+    return {name: qs[name](spark, sf_dir) for name in _oracled_queries()}
+
+
+@pytest.fixture(scope="module")
+def plans(frames):
+    return {name: plan_str(df) for name, df in frames.items()}
 
 
 # --- global lints over every oracled query -------------------------------
@@ -198,3 +204,62 @@ def test_latest_per_key_is_aggregate_not_window(plans):
     aggs = [i for i, n in enumerate(nodes) if "Aggregate" in n]
     exch = next(i for i, n in enumerate(nodes) if "Exchange" in n)
     assert any(i < exch for i in aggs), f"no partial agg before exchange: {nodes}"
+
+
+# --- oracle fetch parity (schema only) -------------------------------------
+
+def test_oracle_integral_columns_fetch_as_integers(frames, sf_dir):
+    """The correctness gate fetches each oracle through Arrow, where DuckDB's
+    HUGEINT (an uncast ``sum`` of integers) and DECIMAL arrive as
+    decimal128 and never hash equal to Spark's integers. Every oracle
+    runs in DuckDB on the test tables; its Arrow result schema is
+    compared with the Spark query's analyzed schema (Spark runs
+    nothing). A decimal column where Spark's is integral fails."""
+    import duckdb
+    import pyarrow as pa
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    con = duckdb.connect()
+    for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
+        table = os.path.basename(p)[: -len(".parquet")]
+        con.execute(f"create view {table} as select * from '{p}'")
+    oracles = entry_mod.oracle_sql()
+    offenders = []
+    for name, df in frames.items():
+        otypes = {f.name: f.type for f in con.execute(oracles[name]).arrow().schema}
+        for field in df.schema.fields:
+            if (isinstance(field.dataType, (ByteType, ShortType, IntegerType, LongType))
+                    and pa.types.is_decimal(otypes.get(field.name, pa.null()))):
+                offenders.append(f"{name}.{field.name}: {otypes[field.name]}")
+    assert not offenders, f"oracle decimals where Spark is integral: {offenders}"
+
+
+# --- constant data stays in the JVM -----------------------------------------
+
+def test_constant_frames_plan_as_local_relation(spark, tmp_path):
+    """Every frame the package builds from Python constants (the 8
+    gazetteer/geo dims, the gate's overflow vocabulary, the empty edge
+    table) must plan as a JVM LocalRelation: scanning or broadcasting
+    it then starts no Python worker."""
+    from ai_bangladesh_address_parser_spark.data import gazetteer as gz
+    from ai_bangladesh_address_parser_spark.data import geo_hierarchy as gh
+    from ai_bangladesh_address_parser_spark.plans.incremental import IncrementalLinker
+    from ai_bangladesh_address_parser_spark.plans.pipeline import LinkagePlan
+
+    frames = {f.__name__: f(spark) for f in (
+        gz.district_division_df, gz.district_variants_df, gz.areas_df,
+        gz.area_variants_df, gz.postal_codes_df,
+        gh.upazilas_df, gh.unions_df, gh.villages_df)}
+    plan = LinkagePlan(spark)
+    plan._gate_extra = ((), ("qxzoverflow",))  # force the semi-join path
+    frames["overflow_vocab"] = plan._apply_gate(
+        gz.local_df(spark, [("m1", "prose")], "mention_id string, normalized string"),
+        "mention_id")
+    linker = IncrementalLinker(spark, str(tmp_path))
+    linker.version = 1  # committed version with no edge table
+    frames["empty_edges"] = linker.edges()
+    for name, df in frames.items():
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+        assert kinds == {"LocalRelation"}, f"{name}: plan leaves {kinds}"
+

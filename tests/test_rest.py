@@ -213,13 +213,19 @@ def test_concurrent_load_amortizes_batches(server, service):
     # amortization: ≪ one job per request (a serial client would pay
     # `total` jobs; concurrency must collapse that by ≥ 4x)
     assert batches <= total // 4, (batches, total)
-    # p95 bounded by a few batch drains (each ~1-3 s on an idle box).
-    # The bound guards against dispatcher starvation / unbounded
-    # queuing, not idle-box speed: on a contended shared host each
-    # drain stretches several-fold (observed p95 68 s during a loaded
-    # full-suite run whose amortization assert still passed), so the
-    # bound must tolerate that while still failing a genuine hang.
-    assert p95 < 240.0
+    # p95 bounded by a few batch drains of THIS run: with 32 clients
+    # and max_batch=64 every queued request fits the next batch, so a
+    # request waits at most for the drain in flight plus its own (2
+    # drains); 4x the median drain leaves 2x for drain-length spread.
+    # Relative to the measured drain, the bound follows a contended
+    # host (drains stretch several-fold) yet still fails starvation or
+    # unbounded queueing; the old fixed 240 s stays as a ceiling, so
+    # it is never looser than before.
+    drains = sorted(list(service.drain_s)[-batches:])
+    median_drain = drains[len(drains) // 2]
+    bound = min(240.0, 4.0 * median_drain)
+    assert p95 < bound, (p95, bound, drains)
     print(f"\nREST load: {total} reqs, {batches} batches "
           f"({total / batches:.1f} req/batch), p95 {p95:.2f}s, "
-          f"p50 {latencies[total // 2]:.2f}s")
+          f"p50 {latencies[total // 2]:.2f}s, median drain {median_drain:.2f}s, "
+          f"bound {bound:.2f}s")

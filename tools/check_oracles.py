@@ -101,9 +101,11 @@ def main():
                   f"[{time.time()-t0:.1f}s]")
             continue
         try:
-            res = con.execute(os_[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
+            # fetch through Arrow as the correctness gate does: fetchall() turns
+            # HUGEINT/DECIMAL into Python ints and hides the mismatch
+            res = con.execute(os_[name]).arrow()
+            ocols = res.column_names
+            orows = list(zip(*(c.to_pylist() for c in res.columns)))
         except Exception as ex:
             print(f"FAIL {name}: duckdb error: {str(ex)[:300]}")
             failures.append(name)
