@@ -169,6 +169,8 @@ def cmd_state_maintain(args) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from ai_bangladesh_address_parser_spark.operators.scoring import SCORERS
+
     p = argparse.ArgumentParser(prog="ai_bangladesh_address_parser_spark")
     sub = p.add_subparsers(dest="verb", required=True)
 
@@ -186,7 +188,7 @@ def main(argv: list[str] | None = None) -> int:
     link = sub.add_parser("link", help="full linkage pipeline")
     common(link)
     link.add_argument("--scorer", default="levenshtein",
-                      choices=["levenshtein", "difflib", "jaro_winkler", "token_jaccard"])
+                      choices=list(SCORERS))
     link.add_argument("--threshold", type=float, default=0.85)
     link.set_defaults(fn=cmd_link)
 
@@ -212,7 +214,7 @@ def main(argv: list[str] | None = None) -> int:
     ing.add_argument("--format", default="parquet",
                      help="parquet (default) or iceberg")
     ing.add_argument("--scorer", default="levenshtein",
-                     choices=["levenshtein", "difflib", "jaro_winkler", "token_jaccard"])
+                     choices=list(SCORERS))
     ing.add_argument("--threshold", type=float, default=0.85)
     ing.add_argument("--maintain-every", type=int, default=None,
                      help="run vacuum+compact after every Nth committed version")

@@ -109,7 +109,7 @@ def expansion_repartition(df: DataFrame, *cols: str, n: int | None = None) -> Da
     expanded output, so a 44k-row key table that expands to 38M pairs
     gets coalesced onto a handful of tasks and the expansion runs
     nearly serial (measured 6.7× slower than the static plan on the
-    hot-block stress; BENCH.md "Hot-block skew stress"). A
+    hot-block stress; BENCH_HISTORY.md "Hot-block skew stress"). A
     REPARTITION_BY_NUM shuffle (``repartition(n, cols)`` with an
     explicit count) is exempt from AQE coalescing, so the expansion
     keeps its parallelism under either planner mode — and since the

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..data import gazetteer as gz
+from .house_road import house_road_area_evidence
 
 EVIDENCE_SCHEMA = "mention_id string, component string, value string, confidence double, source string"
 
@@ -60,18 +61,6 @@ _FSM_TIERS: list[tuple[str, str, int, float]] = [
     ("flat_number", r"(?iU)Flat\s+(\w+)", 1, 0.75),
     ("floor_number", r"(?iU)Floor\s+(\d+)", 1, 0.75),
     ("block_number", r"(?U)Block\s+([A-Z0-9]+)", 1, 0.75),
-]
-
-# house/road expression tiers: the fast shallow path, swapped out for
-# the guard/priority pandas-UDF battery (operators.house_road) when
-# deep extraction is on
-_REGEX_TIERS_HOUSE_ROAD: list[tuple[str, str, int, float]] = [
-    ("house_number", r"(?iU)\b(?:house|holding|building|bldg|plot)\s*(?:name)?\s*(?:no|number)?\s*[.\-]?\s*(\d+(?:/[A-Za-z0-9]+)?(?:-?[A-Za-z])?)\b", 1, 0.96),
-    ("house_number", r"(?U)^(\d+(?:/[A-Za-z0-9]+)+)\b", 1, 0.92),
-    ("house_number", r"(?iU)\bh[\- ]?(\d+(?:/[A-Za-z0-9]+)?)\b", 1, 0.90),
-    ("road", r"(?iU)\b(?:road|rd|lane|ln|avenue|ave)\s*(?:no|number)?\s*[.\-]?\s*(\d+(?:/[A-Za-z0-9]+)?[A-Za-z]?)\b", 1, 0.95),
-    ("road", r"(?iU)\b(\d+(?:/[A-Za-z0-9]+)?[A-Za-z]?)\s*(?:no\.?\s*)?(?:road|lane|avenue)\b", 1, 0.88),
-    ("road", r"(?iU)\br[\- ]?(\d+[A-Za-z]?)\b", 1, 0.85),
 ]
 
 _REGEX_TIERS: list[tuple[str, str, int, float]] = [
@@ -184,19 +173,16 @@ def _positional_postal(text: Column, source: str, conf: float) -> Column:
 
 
 def regex_evidence(mentions: DataFrame, id_col: str = "mention_id",
-                   text_col: str = "normalized", deep: bool = True,
-                   fsm: bool = True) -> DataFrame:
+                   text_col: str = "normalized", fsm: bool = True) -> DataFrame:
     """All expression-computable evidence (fsm + regex tiers) in ONE pass.
 
     Returns the evidence long format. Single projection → explode; no
-    joins, no shuffle. With ``deep`` (default), house/road come from the
-    guard/priority UDF battery instead of the shallow expression tiers,
-    so those tiers are omitted here. ``fsm=False`` disables the optional
-    FSM stage (stage 3).
+    joins, no shuffle. House/road come from the guard/priority UDF
+    battery (``extract_evidence``), not from here. ``fsm=False``
+    disables the optional FSM stage (stage 3).
     """
     text = F.col(text_col)
-    tiers = _REGEX_TIERS if deep else _REGEX_TIERS + _REGEX_TIERS_HOUSE_ROAD
-    structs = _tier_structs(text, tiers, "regex") + [_positional_postal(text, "regex", 0.80)]
+    structs = _tier_structs(text, _REGEX_TIERS, "regex") + [_positional_postal(text, "regex", 0.80)]
     # T9 group-concat flat form "(A)(5)" → "A5"
     # (flat_number_processor.py:617-830 concat family): two captures
     # joined — not expressible as a single-tier regexp_extract
@@ -635,7 +621,6 @@ def fuzzy_area_evidence(
         ).alias("pfx"),
     )
 
-    spark = mentions.sparkSession
     areas_base = gz.areas_df(spark).select(F.lower("area").alias("area_lc"), "area")
     areas = areas_base.withColumn("pfx", F.substring("area_lc", 1, 4)).unionByName(
         areas_base.filter(F.length("area_lc").between(4, 5))
@@ -980,23 +965,26 @@ def geo_evidence(
     area_vals = (ev_idx.filter(F.col("component") == "area")
                  .select("mention_id", F.col("lv").alias("vkey")).distinct())
 
-    def val_hits(dim: DataFrame, conf_area: float, conf_fill: float) -> tuple:
+    def val_hits(dim: DataFrame) -> DataFrame:
         d = dim.select(F.lower("name").alias("k"), "name", "district", "division")
-        h = (area_vals.join(F.broadcast(d), area_vals.vkey == d.k, "inner")
-             .groupBy("mention_id")
-             .agg(F.max_by(F.struct("name", "district", "division"),
-                           F.struct(F.length("name"), F.col("name"))).alias("m")))
+        return (area_vals.join(F.broadcast(d), area_vals.vkey == d.k, "inner")
+                .groupBy("mention_id")
+                .agg(F.max_by(F.struct("name", "district", "division"),
+                              F.struct(F.length("name"), F.col("name"))).alias("m")))
+
+    def val_ev(h: DataFrame, conf_area: float, conf_fill: float) -> DataFrame:
         area = emit(h, "area", "m.name", conf_area, "geographic_validated")
         dist = emit(h, "district", "m.district", conf_fill,
                     "geographic_validated", "district")
         dv = emit(h, "division", "m.division", conf_fill,
                   "geographic_validated", "division")
-        return h, area.unionByName(dist).unionByName(dv)
+        return area.unionByName(dist).unionByName(dv)
 
-    vu_hits, vu_ev = val_hits(gh.upazilas_df(spark), 0.95, 0.95)
-    _, vn_ev0 = val_hits(gh.unions_df(spark), 0.95, 0.90)
-    vn_ev = vn_ev0  # unions only where no upazila-name match
-    vn_ev = vn_ev.join(vu_hits.select("mention_id"), "mention_id", "left_anti")
+    vu_hits = val_hits(gh.upazilas_df(spark))
+    vu_ev = val_ev(vu_hits, 0.95, 0.95)
+    # unions only where no upazila-name match
+    vn_ev = val_ev(val_hits(gh.unions_df(spark)), 0.95, 0.90).join(
+        vu_hits.select("mention_id"), "mention_id", "left_anti")
 
     return (
         emit(uhits, "area", "m.name", 0.90, "geographic_upazila_extraction")
@@ -1133,47 +1121,38 @@ def extract_evidence(
     mentions: DataFrame,
     id_col: str = "mention_id",
     text_col: str = "normalized",
-    materialize: bool = True,
     gazetteer: DataFrame | None = None,
     area_vocab: DataFrame | None = None,
-    deep: bool = True,
     stages: frozenset[str] | None = None,
 ) -> DataFrame:
     """Full stage 3-7 evidence generation. Input must already carry the
     normalized text column (see functions.normalize.normalize_expr).
 
-    ``materialize`` cuts lineage on the first-pass evidence before the
-    gazetteer enrichment fans out over it (6 broadcast-join branches) —
-    without it the regex battery is re-evaluated per branch and the
+    Lineage is cut on the first-pass evidence before the gazetteer
+    enrichment fans out over it (6 broadcast-join branches) — without
+    the cut the regex battery is re-evaluated per branch and the
     logical plan grows combinatorially. localCheckpoint rather than
     persist(): nothing stays registered with the CacheManager, so
     repeated invocations in one driver (streaming micro-batches) don't
     accumulate cached plans."""
     stages = DEFAULT_STAGES if stages is None else frozenset(stages)
-    base = regex_evidence(mentions, id_col, text_col, deep=deep,
-                          fsm="fsm" in stages).unionByName(
+    base = regex_evidence(mentions, id_col, text_col, fsm="fsm" in stages).unionByName(
         vocab_evidence(mentions, id_col, text_col, area_vocab=area_vocab)
+    ).unionByName(
+        house_road_area_evidence(mentions, id_col=id_col, text_col=text_col)
     )
-    if deep:
-        from .house_road import house_road_area_evidence
-
-        base = base.unionByName(
-            house_road_area_evidence(mentions, id_col=id_col, text_col=text_col)
-        )
     if "spacy" in stages:
         from .ner import ner_evidence
 
         base = base.unionByName(ner_evidence(mentions, id_col=id_col, text_col=text_col))
-    if materialize:
-        base = base.localCheckpoint(eager=False)
+    base = base.localCheckpoint(eager=False)
     first_pass = base
     if "gazetteer" in stages:
         first_pass = first_pass.unionByName(
             fuzzy_area_evidence(mentions, base, id_col, text_col)
         ).unionByName(
             position_area_evidence(mentions, base, id_col, text_col))
-    if materialize:
-        first_pass = first_pass.localCheckpoint(eager=False)
+    first_pass = first_pass.localCheckpoint(eager=False)
     out = first_pass
     if "gazetteer" in stages:
         out = out.unionByName(gazetteer_evidence(first_pass, gazetteer=gazetteer))

@@ -15,8 +15,8 @@ container, so the model hook is pluggable:
     BIO tagger trained offline on the reference's own public span data
     (``data/training/spacy_training_data.json``, 1,281 examples) by
     ``tools/train_ner.py``; weights ship in the package and load once
-    per executor process. Held-out span F1 is reported in BENCH.md and
-    pinned in ``tests/test_ner_learned.py``.
+    per executor process. Held-out span F1 is reported in
+    BENCH_HISTORY.md and pinned in ``tests/test_ner_learned.py``.
   * ``model="spacy"`` — loads the real pipeline inside the iterator if
     spaCy + a model path are available; raises ImportError otherwise
     (gated, never at executor runtime).

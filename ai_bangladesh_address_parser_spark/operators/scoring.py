@@ -6,7 +6,7 @@ similarity on lowercased values, weighted sum (postal .30, district
 .25, area .20, house .10, road .10, division .05) renormalized over
 components present on BOTH sides, match iff score >= 0.85.
 
-Two scorer backends:
+Three scorer backends (``SCORERS``):
   * ``difflib``      — exact reference parity (SequenceMatcher /
     Ratcliff-Obershelp) as an Arrow-batched pandas UDF. This is the
     oracle-faithful path used for the F1 ≥ 0.99 criterion.
@@ -14,8 +14,10 @@ Two scorer backends:
     built-in ``levenshtein`` expression; whole-stage codegen, no Python
     at all. This is the 100 TB hot path; its threshold is calibrated in
     tests to agree with difflib on the labeled pairs.
+  * ``jaro_winkler`` — Jaro-Winkler as an Arrow-batched pandas UDF,
+    value-identical to DuckDB's ``jaro_winkler_similarity``.
 
-Both score the candidate-pair DataFrame columnar-wise — no per-row
+All score the candidate-pair DataFrame columnar-wise — no per-row
 driver logic, no collect.
 """
 
@@ -118,14 +120,13 @@ def _lev_sim(a: Column, b: Column) -> Column:
     )
 
 
-def _token_jaccard(a: Column, b: Column) -> Column:
-    """|A∩B| / |A∪B| over whitespace tokens — exact rational, JVM-side."""
-    ta = F.array_distinct(F.split(a, r"(?U)\s+"))
-    tb = F.array_distinct(F.split(b, r"(?U)\s+"))
-    return F.when(
-        a.isNotNull() & b.isNotNull() & (a != "") & (b != ""),
-        F.size(F.array_intersect(ta, tb)) / F.size(F.array_union(ta, tb)).cast("double"),
-    )
+# scorer backend name → per-component similarity; the one list of
+# scorers (the CLI builds its --scorer choices from it)
+SCORERS = {
+    "levenshtein": _lev_sim,
+    "difflib": _difflib_ratio,
+    "jaro_winkler": _jaro_winkler,
+}
 
 
 def score_pairs(
@@ -147,12 +148,7 @@ def score_pairs(
     :189-194); no comparable components at all → score 0.0.
     """
     components = components or ALL_COMPONENTS
-    sim = {
-        "difflib": _difflib_ratio,
-        "levenshtein": _lev_sim,
-        "token_jaccard": _token_jaccard,
-        "jaro_winkler": _jaro_winkler,
-    }[scorer]
+    sim = SCORERS[scorer]
 
     df = pairs
     sim_cols = []

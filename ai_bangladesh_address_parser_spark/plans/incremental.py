@@ -107,7 +107,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..data.gazetteer import local_df
-from ..operators.blocking import blocking_keys, candidate_pairs
+from ..operators.blocking import candidate_pairs
 from ..operators.cluster import connected_components
 from ..operators.scoring import attach_pair_components, score_pairs
 from .pipeline import LinkagePlan
@@ -129,6 +129,10 @@ class IncrementalLinker:
     pipeline's output contract: url, mention_id, norm_key, normalized,
     components, entity_id).
     """
+
+    # the plan type whose extract / unique_mentions / block_keys a batch
+    # reuses, so the S1 and blocking-key rules live in plans.pipeline
+    _plan_cls = LinkagePlan
 
     def __init__(
         self,
@@ -339,7 +343,7 @@ class IncrementalLinker:
         stored edges, but only on the rare batch where a block newly
         crosses ``max_block``.
         """
-        plan = LinkagePlan(
+        plan = self._plan_cls(
             self.spark, scorer=self.scorer, threshold=self.threshold,
             use_minhash=self.use_minhash, gate=self.gate,
             max_block=self.max_block,
@@ -348,27 +352,24 @@ class IncrementalLinker:
         # delta, and the state writes all reuse it
         wide = plan.extract(pages).localCheckpoint(eager=True)
         delta_mentions = wide.select("url", "mention_id", "norm_key")
-        delta_nodes = wide.drop("mention_id", "url").dropDuplicates(["norm_key"])
+        # materialized by the plan's stage store
+        delta_nodes = plan.unique_mentions(wide)
 
         old_nodes = self.nodes()
-        if old_nodes is not None:
+        if old_nodes is None:
+            new_nodes = delta_nodes
+        else:
             # the resolved view costs one window over the deltas;
             # materialize it once — every downstream join reuses it
             old_nodes = old_nodes.localCheckpoint(eager=True)
-        if old_nodes is None:
-            new_nodes = delta_nodes.localCheckpoint(eager=True)
-        else:
             new_nodes = (
                 delta_nodes.join(old_nodes, "norm_key", "left_anti")
                 .localCheckpoint(eager=True)
             )
 
         new_keys = (
-            self._blocking_keys(
-                new_nodes,
-                plan=plan,
-            )
-            # blocking_keys standardizes its id column to "mention_id";
+            plan.block_keys(new_nodes, id_col="norm_key")
+            # the key table standardizes its id column to "mention_id";
             # in this table the ids ARE norm_keys — name them so
             .withColumnRenamed("mention_id", "norm_key")
             .localCheckpoint(eager=True)
@@ -576,16 +577,6 @@ class IncrementalLinker:
             }
             self.metrics_history.append(self.last_metrics)
         return self.nodes()
-
-    def _blocking_keys(self, nodes: DataFrame, plan: LinkagePlan) -> DataFrame:
-        return blocking_keys(
-            nodes,
-            id_col="norm_key",
-            text_col="normalized",
-            use_minhash=self.use_minhash,
-            band_gate=(lambda df: plan._apply_gate(df, "norm_key"))
-            if self.gate else None,
-        )
 
     def _repair_capped(
         self,

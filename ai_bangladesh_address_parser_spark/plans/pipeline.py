@@ -32,6 +32,17 @@ from pyspark.sql import functions as F
 from ..data.gazetteer import local_df
 from ..functions.normalize import norm_key_expr, normalize_expr
 from ..functions.signal import address_signal_expr, split_fold_terms
+from ..operators.blocking import (
+    blocking_keys,
+    candidate_pairs,
+    expansion_repartition,
+    shuffle_width,
+)
+from ..operators.cluster import assign_entity_ids
+from ..operators.extract import DEFAULT_STAGES, PROFILES, extract_evidence
+from ..operators.resolve import resolve_evidence, resolved_wide
+from ..operators.scoring import attach_pair_components, score_pairs
+from ..reference_semantics import ALL_COMPONENTS
 
 # Mention harvesting: pull the address-looking spans out of the page
 # text. Anchored on the address-start keywords the reference's pattern
@@ -52,21 +63,23 @@ def harvest_mentions_expr(text_col: str):
     return F.when(F.size(spans) > 0, spans).otherwise(F.array(F.col(text_col)))
 
 
-def harvest_mention_expr(text_col: str):
-    """First-span form, kept for single-mention callers/tests."""
-    span = F.regexp_extract(F.col(text_col), _MENTION_PATTERN, 1)
-    return F.when(span != "", span).otherwise(F.col(text_col))
-from ..operators.blocking import (
-    blocking_keys,
-    candidate_pairs,
-    expansion_repartition,
-    shuffle_width,
-)
-from ..operators.cluster import assign_entity_ids
-from ..operators.extract import extract_evidence
-from ..operators.resolve import resolve_evidence, resolved_wide
-from ..operators.scoring import attach_pair_components, score_pairs
-from ..reference_semantics import ALL_COMPONENTS
+def harvest_mentions(pages: DataFrame, *carry: str) -> DataFrame:
+    """pages → one row per harvested span: ``(url, mention_id,
+    normalized, *carry)`` with ``mention_id = url + '#' + mention_idx``.
+    The one pages → mentions step, shared by batch S1
+    (:meth:`LinkagePlan.extract`) and streaming S1
+    (``streaming.stream_extract.stream_mentions``); ``carry`` names
+    page columns that ride along unchanged."""
+    spans = pages.select(
+        "url", *carry,
+        F.posexplode(harvest_mentions_expr("text")).alias("mention_idx", "span"),
+    )
+    return spans.select(
+        "url",
+        F.concat(F.col("url"), F.lit("#"), F.col("mention_idx").cast("string")).alias("mention_id"),
+        normalize_expr(F.col("span")).alias("normalized"),
+        *carry,
+    )
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -177,9 +190,14 @@ class LinkagePlan:
     """Builder for the full pages→entities job.
 
     All stage methods return DataFrames (lazy); ``run`` wires them with
-    observations and optional checkpointing. Scorer defaults to the
-    pure-JVM ``levenshtein`` backend (100 TB hot path); pass
-    ``scorer="difflib"`` for reference-oracle parity runs.
+    observations and optional checkpointing. S1 extracts each distinct
+    normalized mention once; S2-S4 block, score and cluster those unique
+    mentions (``norm_key`` nodes), and pages rejoin by ``norm_key``.
+    Scorer defaults to the pure-JVM ``levenshtein`` backend (100 TB hot
+    path); pass ``scorer="difflib"`` for reference-oracle parity runs.
+    ``profile`` names the optional extraction stages (fast/balanced/
+    accurate/minimal, reference tools/control_stages.py:45-69); None
+    runs the default stage set.
     """
 
     def __init__(
@@ -188,23 +206,16 @@ class LinkagePlan:
         scorer: str = "levenshtein",
         threshold: float = 0.85,
         store: StageStore | None = None,
-        dedup_mentions: bool = True,
         use_minhash: bool = True,
-        unique_level: bool = True,
-        gazetteer: DataFrame | None = None,
         area_vocab: DataFrame | None = None,
         profile: str | None = None,
-        stages: frozenset[str] | None = None,
         gate: bool = True,
         max_block: int | None = 100_000,
     ):
-        from ..operators.extract import DEFAULT_STAGES, PROFILES
-
         self.spark = spark
         self.scorer = scorer
         self.threshold = threshold
         self.store = store or StageStore(base=None)
-        self.dedup_mentions = dedup_mentions
         self.use_minhash = use_minhash
         # Address-likelihood gate (functions/signal.py): skip the deep
         # extraction battery and minhash banding for mentions with zero
@@ -220,24 +231,7 @@ class LinkagePlan:
         # against a one-shot run at the same setting
         self.max_block = max_block
         self._gate_extra: tuple[str, ...] | None = None
-        # D5 stage control: an explicit ``stages`` set wins; else a
-        # named profile (fast/balanced/accurate/minimal, reference
-        # tools/control_stages.py:45-69); else the default stage set.
-        if stages is not None:
-            self.stages = frozenset(stages)
-        elif profile is not None:
-            self.stages = PROFILES[profile]
-        else:
-            self.stages = DEFAULT_STAGES
-        # unique_level: block/score/cluster at the UNIQUE normalized
-        # mention level (norm_key nodes) instead of per page. Exact-dup
-        # pages — the dominant redundancy of a web corpus — collapse
-        # BEFORE any pairwise work: candidate pairs, scoring, and CC all
-        # shrink by the duplication factor; pages rejoin by norm_key at
-        # the end. Identical text ⇒ identical address ⇒ same entity, so
-        # recall is untouched.
-        self.unique_level = unique_level
-        self.gazetteer = gazetteer
+        self.stages = DEFAULT_STAGES if profile is None else PROFILES[profile]
         # (variant, area) rows derived from a labeled corpus
         # (gazetteer_build.area_vocab_from_labeled) — the reference
         # builds its gazetteer from the batch's own labeled input, so
@@ -340,91 +334,53 @@ class LinkagePlan:
         (md5 of the lowercased normalized text) stays in the output:
         it is the unique-mention node id for stages 2-4.
         """
-        spans = pages.select(
-            F.col("url"),
-            F.posexplode(harvest_mentions_expr("text")).alias("mention_idx", "span"),
+        keyed = harvest_mentions(pages).withColumn(
+            "norm_key", F.md5(norm_key_expr("normalized")))
+        # cut lineage before the evidence fan-out: the regex / vocab /
+        # fuzzy branches each re-expand the normalize+dedup subtree
+        # otherwise (measured 2× slower end-to-end)
+        uniq = (keyed.select("norm_key", "normalized")
+                .dropDuplicates(["norm_key"])
+                .localCheckpoint(eager=False))
+        # skip the EAGER stats aggregate when s1 will load from its
+        # stored snapshot — otherwise a resumed run pays the full pages
+        # scan + dedup shuffle just to discard the plan (gate_stats
+        # stays None on resume; the stored stage is the source of truth
+        # for its rows)
+        live = self._apply_gate(uniq, "norm_key") if self.gate else uniq
+        if self.gate and not self.store.will_resume(self.spark, "s1_mentions"):
+            if self._gate_terms()[1]:
+                # overflow semi-join in play: the skip count is not a
+                # pure column aggregate — count kept rows off the
+                # (reused-downstream) gated frame instead
+                live = live.localCheckpoint(eager=False)
+                total = uniq.count()
+                self.gate_stats = {
+                    "unique_mentions": total,
+                    "gate_skipped": total - live.count(),
+                }
+            else:
+                # one scalar metrics aggregate over the (materialized-
+                # anyway) unique-mention checkpoint; Observation can't
+                # ride here — the CollectMetrics node executes during
+                # the untracked checkpoint materialization and reports
+                # empty metrics
+                sig = self._gate_expr()
+                stats = uniq.agg(
+                    F.count(F.lit(1)).alias("unique_mentions"),
+                    F.sum((~sig).cast("long")).alias("gate_skipped"),
+                ).first()
+                self.gate_stats = {
+                    "unique_mentions": stats["unique_mentions"],
+                    "gate_skipped": stats["gate_skipped"] or 0,
+                }
+        live = self._battery_repartition(live, "norm_key")
+        ev = extract_evidence(live, id_col="norm_key", text_col="normalized",
+                              area_vocab=self.area_vocab, stages=self.stages)
+        wide_u = resolved_wide(resolve_evidence(ev))  # mention_id == norm_key
+        wide = keyed.join(
+            wide_u.withColumnRenamed("mention_id", "norm_key"), "norm_key", "left"
         )
-        mentions = spans.select(
-            "url",
-            F.concat(F.col("url"), F.lit("#"), F.col("mention_idx").cast("string")).alias("mention_id"),
-            normalize_expr(F.col("span")).alias("normalized"),
-        )
-        keyed = mentions.withColumn("norm_key", F.md5(norm_key_expr("normalized")))
-        if self.dedup_mentions:
-            # cut lineage before the evidence fan-out: the regex / vocab
-            # / fuzzy branches each re-expand the normalize+dedup
-            # subtree otherwise (measured 2× slower end-to-end)
-            uniq = (keyed.select("norm_key", "normalized")
-                    .dropDuplicates(["norm_key"])
-                    .localCheckpoint(eager=False))
-            # skip the EAGER stats aggregate when s1 will load from its
-            # stored snapshot — otherwise a resumed run pays the full
-            # pages scan + dedup shuffle just to discard the plan
-            # (gate_stats stays None on resume; the stored stage is the
-            # source of truth for its rows)
-            live = self._apply_gate(uniq, "norm_key") if self.gate else uniq
-            if self.gate and not self.store.will_resume(self.spark, "s1_mentions"):
-                if self._gate_terms()[1]:
-                    # overflow semi-join in play: the skip count is not a
-                    # pure column aggregate — count kept rows off the
-                    # (reused-downstream) gated frame instead
-                    live = live.localCheckpoint(eager=False)
-                    total = uniq.count()
-                    self.gate_stats = {
-                        "unique_mentions": total,
-                        "gate_skipped": total - live.count(),
-                    }
-                else:
-                    # one scalar metrics aggregate over the
-                    # (materialized-anyway) unique-mention checkpoint;
-                    # Observation can't ride here — the CollectMetrics
-                    # node executes during the untracked checkpoint
-                    # materialization and reports empty metrics
-                    sig = self._gate_expr()
-                    stats = uniq.agg(
-                        F.count(F.lit(1)).alias("unique_mentions"),
-                        F.sum((~sig).cast("long")).alias("gate_skipped"),
-                    ).first()
-                    self.gate_stats = {
-                        "unique_mentions": stats["unique_mentions"],
-                        "gate_skipped": stats["gate_skipped"] or 0,
-                    }
-            live = self._battery_repartition(live, "norm_key")
-            ev = extract_evidence(live, id_col="norm_key", text_col="normalized",
-                                  gazetteer=self.gazetteer,
-                                  area_vocab=self.area_vocab, stages=self.stages)
-            wide_u = resolved_wide(resolve_evidence(ev))  # mention_id == norm_key
-            wide = keyed.join(
-                wide_u.withColumnRenamed("mention_id", "norm_key"), "norm_key", "left"
-            )
-        else:
-            keyed = keyed.localCheckpoint(eager=False)
-            live = self._apply_gate(keyed, "mention_id") if self.gate else keyed
-            if self.gate and not self.store.will_resume(self.spark, "s1_mentions"):
-                # same skip accounting as the dedup branch ("unique"
-                # here means raw mentions — no dedup ran); metrics()
-                # must report s1_gate whenever rows are being skipped
-                if self._gate_terms()[1]:
-                    live = live.localCheckpoint(eager=False)
-                    total = keyed.count()
-                    self.gate_stats = {
-                        "unique_mentions": total,
-                        "gate_skipped": total - live.count(),
-                    }
-                else:
-                    sig = self._gate_expr()
-                    stats = keyed.agg(
-                        F.count(F.lit(1)).alias("unique_mentions"),
-                        F.sum((~sig).cast("long")).alias("gate_skipped"),
-                    ).first()
-                    self.gate_stats = {
-                        "unique_mentions": stats["unique_mentions"],
-                        "gate_skipped": stats["gate_skipped"] or 0,
-                    }
-            live = self._battery_repartition(live, "mention_id")
-            ev = extract_evidence(live, gazetteer=self.gazetteer,
-                                  area_vocab=self.area_vocab, stages=self.stages)
-            wide = keyed.join(resolved_wide(resolve_evidence(ev)), "mention_id", "left")
         for c in ALL_COMPONENTS + ["overall_confidence"]:
             if c not in wide.columns:
                 wide = wide.withColumn(c, F.lit(None).cast("double" if c == "overall_confidence" else "string"))
@@ -445,8 +401,11 @@ class LinkagePlan:
         return self.store.through(self.spark, "s2_unique_mentions", uniq)
 
     # -- S2 ---------------------------------------------------------------
-    def block(self, nodes: DataFrame, id_col: str = "mention_id") -> DataFrame:
-        keys = blocking_keys(
+    def block_keys(self, nodes: DataFrame, id_col: str = "mention_id") -> DataFrame:
+        """(mention_id, block_key) rows for ``nodes`` — the one blocking-
+        key rule, shared by :meth:`block` and the incremental linker's
+        ``link_batch``. ``mention_id`` carries the ``id_col`` values."""
+        return blocking_keys(
             nodes,
             id_col=id_col,
             text_col="normalized",
@@ -458,7 +417,10 @@ class LinkagePlan:
             band_gate=(lambda df: self._apply_gate(df, id_col))
             if self.gate else None,
         )
-        keys = self.store.through(self.spark, "s2_block_keys", keys)
+
+    def block(self, nodes: DataFrame, id_col: str = "mention_id") -> DataFrame:
+        keys = self.store.through(
+            self.spark, "s2_block_keys", self.block_keys(nodes, id_col))
         return candidate_pairs(keys, max_block=self.max_block)
 
     # -- S3 ---------------------------------------------------------------
@@ -486,13 +448,10 @@ class LinkagePlan:
         obs = Observation("s1_rows")
         self.observations["s1_mentions"] = obs
         wide = self.extract(pages).observe(obs, F.count(F.lit(1)).alias("rows"))
-        if self.unique_level:
-            nodes, node_id = self.unique_mentions(wide), "norm_key"
-        else:
-            nodes, node_id = wide, "mention_id"
-        pairs = self.block(nodes, id_col=node_id)
-        edges = self.score(pairs, nodes, id_col=node_id)
-        return self.cluster(wide, edges, id_col=node_id)
+        nodes = self.unique_mentions(wide)
+        pairs = self.block(nodes, id_col="norm_key")
+        edges = self.score(pairs, nodes, id_col="norm_key")
+        return self.cluster(wide, edges, id_col="norm_key")
 
     def metrics(self) -> dict:
         out = {}

@@ -11,8 +11,10 @@ accumulated mentions.
 Two surfaces:
 
   * :func:`stream_mentions` — the narrow S1 stage as a true streaming
-    DataFrame (normalize + harvest + per-row evidence array; no
-    shuffle, so any sink/trigger works, watermarked on ``warc_ts``);
+    DataFrame: one row per harvested mention, keyed ``url#idx`` exactly
+    like batch S1 (the same ``plans.pipeline.harvest_mentions`` step),
+    with normalized text and page script metadata; no shuffle, so any
+    sink/trigger works, watermarked on ``warc_ts``;
   * :func:`run_incremental_extract` — micro-batch driver
     (``foreachBatch``) that runs the full batch S1 (including the
     groupBy resolve) per batch and appends to a mentions parquet/
@@ -25,7 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.normalize import normalize_expr
 from ..functions.script import script_cols
 from ..sources.pages import PAGES_SCHEMA
 
@@ -45,22 +46,19 @@ def read_page_stream(
 
 
 def stream_mentions(pages: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Narrow streaming S1: one output row per page with normalized
-    mention text + script metadata. Pure projections → appendable to
-    any sink with exactly-once file-source semantics."""
-    from ..plans.pipeline import harvest_mention_expr
+    """Narrow streaming S1: one output row per harvested mention —
+    ``(url, mention_id = url#idx, normalized)``, the same rows batch S1
+    harvests — plus the page's ``warc_ts``, ``lang`` and script
+    metadata. Pure projections + one explode → appendable to any sink
+    with exactly-once file-source semantics."""
+    from ..plans.pipeline import harvest_mentions
 
     sc = script_cols("text")
-    return (
+    return harvest_mentions(
         pages.withWatermark("warc_ts", watermark)
-        .select(
-            F.col("url").alias("mention_id"),
-            F.col("warc_ts"),
-            F.col("lang"),
-            normalize_expr(harvest_mention_expr("text")).alias("normalized"),
-            sc["primary_script"].alias("primary_script"),
-            sc["is_mixed"].alias("is_mixed"),
-        )
+        .withColumn("primary_script", sc["primary_script"])
+        .withColumn("is_mixed", sc["is_mixed"]),
+        "warc_ts", "lang", "primary_script", "is_mixed",
     )
 
 

@@ -129,7 +129,7 @@ def run_bench(scale: int = 1) -> dict:
     times["s1_extract"] = round(time.time() - t, 2)
 
     # unique-level stages 2-4: exact-dup pages collapse to norm_key
-    # nodes BEFORE any pairwise work (see LinkagePlan.unique_level)
+    # nodes BEFORE any pairwise work (see LinkagePlan.run)
     t = time.time()
     nodes = plan.unique_mentions(wide)
     n_unique = nodes.count()
@@ -382,7 +382,7 @@ def run_skew() -> dict:
                                hot_postal_frac=0.3)
     # MENTION level (not unique level): the hot block must be large
     # enough to trip the salting path (> hot_cap=1000)
-    plan = LinkagePlan(spark, scorer="levenshtein", unique_level=False)
+    plan = LinkagePlan(spark, scorer="levenshtein")
     wide = plan.extract(pages)
     from ai_bangladesh_address_parser_spark.operators.blocking import blocking_keys
 

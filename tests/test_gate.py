@@ -191,17 +191,6 @@ def test_gate_metrics_and_singletons(spark):
     assert m["gate_skipped"] <= m["unique_mentions"]
 
 
-def test_gate_metrics_without_dedup(spark):
-    """s1_gate accounting must exist whenever rows are skipped — also in
-    the dedup_mentions=False branch (round-3 review fix)."""
-    corpus, _ = _mixed_corpus(spark)
-    plan = LinkagePlan(spark, gate=True, dedup_mentions=False)
-    plan.extract(corpus).count()
-    m = plan.metrics()["s1_gate"]
-    assert m["gate_skipped"] > 0
-    assert m["gate_skipped"] <= m["unique_mentions"]
-
-
 def test_gate_keeps_area_vocab_surfaces(spark):
     """A labeled area_vocab variant unknown to the static pattern must
     pass the gate and produce identical output to the ungated run."""

@@ -121,16 +121,20 @@ def _simple_pages(spark, rows):
     )
 
 
-class _AreaOnlyLinker(IncrementalLinker):
+class _AreaOnlyPlan(LinkagePlan):
     """Single-key blocking (block = lowercased area) so block sizes are
     exactly controllable; every pair of same-area nodes shares exactly
     ONE block, making the retroactive cap's effect fully observable."""
 
-    def _blocking_keys(self, nodes, plan):
+    def block_keys(self, nodes, id_col="mention_id"):
         return nodes.select(
-            F.col("norm_key").alias("mention_id"),
+            F.col(id_col).alias("mention_id"),
             F.concat(F.lit("a:"), F.lower("area")).alias("block_key"),
         ).filter(F.length(F.coalesce(F.col("area"), F.lit(""))) > 0)
+
+
+class _AreaOnlyLinker(IncrementalLinker):
+    _plan_cls = _AreaOnlyPlan
 
 
 def test_cap_crossing_is_retroactive(spark, tmp_path):

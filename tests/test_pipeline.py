@@ -131,13 +131,18 @@ def test_linkage_end_to_end(spark, sf_dir, tmp_path):
     assert plan2.gate_stats is None
 
 
-def test_multi_mention_page(spark):
+def test_multi_mention_page(spark, tmp_path):
     """FIXTURES F1: a page with two distinct embedded addresses yields
     two mentions with (url, mention_idx) ids and two different entity
-    ids; pages sharing one of those addresses link to it."""
+    ids; pages sharing one of those addresses link to it. Streaming S1
+    over the same pages harvests exactly the batch run's mentions."""
     import pyspark.sql.functions as F  # noqa: N812
 
     from ai_bangladesh_address_parser_spark.sources.pages import PAGES_SCHEMA
+    from ai_bangladesh_address_parser_spark.streaming.stream_extract import (
+        read_page_stream,
+        stream_mentions,
+    )
 
     two = ("Our offices. House 12, Road 5, Gulshan, Dhaka-1212. "
            "Warehouse at House 34, Road 7, Agrabad, Chattogram-4100. Call us.")
@@ -158,6 +163,21 @@ def test_multi_mention_page(spark):
     u3 = ents.filter(F.col("url") == "u3").collect()[0]
     assert u2["entity_id"] == e_dhaka
     assert u3["entity_id"] == e_ctg
+
+    src = str(tmp_path / "pages")
+    pages.write.parquet(src)
+    q = (
+        stream_mentions(read_page_stream(spark, src))
+        .writeStream.format("memory")
+        .queryName("multi_mention_stream")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination(120)
+    streamed = spark.sql("select mention_id, normalized from multi_mention_stream")
+    batch = ents.select("mention_id", "normalized")
+    assert {tuple(r) for r in streamed.collect()} == {tuple(r) for r in batch.collect()}
 
 
 def test_null_empty_text_pages_are_singletons(spark):

@@ -131,7 +131,7 @@ def test_dim_joins_broadcast(plans):
 
 
 def test_expansion_joins_keep_explicit_width(plans):
-    """The AQE coalescing fix (BENCH.md 'AQE high-expansion fix'):
+    """The AQE coalescing fix (BENCH_HISTORY.md 'AQE high-expansion fix'):
     high-expansion self-joins sit behind an explicit-count repartition
     (REPARTITION_BY_NUM), which AQE may not coalesce down to the tiny
     pre-join byte size.
