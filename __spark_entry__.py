@@ -412,7 +412,10 @@ def q_j4_predict_postal(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_j5_geo_proactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: proactive upazila/union extraction with district/division
     auto-fill, gated on absent area/district/division evidence."""
-    from ai_bangladesh_address_parser_spark.operators.extract import geo_evidence
+    from ai_bangladesh_address_parser_spark.operators.extract import (
+        geo_evidence,
+        token_hits,
+    )
 
     c = _t(spark, sf_dir, "customer")
     tok_arr = F.array(F.lit("Savar"), F.lit("Dhamrai"), F.lit("Savarhat1"),
@@ -430,7 +433,7 @@ def q_j5_geo_proactive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("c_custkey") % 6 == 5, F.lit("Gulshan")).otherwise(F.lit("Dhaka")).alias("value"),
         F.lit(0.9).alias("confidence"), F.lit("regex").alias("source"),
     )
-    return geo_evidence(mentions, ev)
+    return geo_evidence(token_hits(mentions)[1], ev)
 
 
 def q_j8_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,6 +503,7 @@ def q_j9_fuzzy_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     and per-word correction success."""
     from ai_bangladesh_address_parser_spark.operators.extract import (
         fuzzy_area_evidence,
+        token_hits,
     )
 
     c = _t(spark, sf_dir, "customer")
@@ -523,7 +527,7 @@ def q_j9_fuzzy_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         mid, F.lit("area").alias("component"), ev_val.alias("value"),
         F.lit(0.9).alias("confidence"), F.lit("regex").alias("source"),
     ).filter(F.col("value").isNotNull())
-    return fuzzy_area_evidence(mentions, ev)
+    return fuzzy_area_evidence(token_hits(mentions)[0], ev)
 
 
 def q_j6_full_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:

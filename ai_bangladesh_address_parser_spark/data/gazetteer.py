@@ -16,6 +16,7 @@ same schema is loaded from the full public postal-code dataset.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # (district, division) — all 64 districts, public administrative data.
 DISTRICT_DIVISION: list[tuple[str, str]] = [
@@ -225,6 +226,61 @@ def postal_codes_df(spark: SparkSession) -> DataFrame:
 
     return local_df(
         spark, dims.POSTAL_CODES, "code string, district string, post_office string")
+
+
+SURFACE_SCHEMA = "kind string, variant string, value string, district string, division string"
+
+
+def surface_rows() -> list[tuple]:
+    """The surface dictionary: every exact surface the evidence battery
+    looks up, as ``(kind, lowercase variant, canonical value, district,
+    division)``. Kinds: ``district`` and ``area`` spelling variants
+    (every area name is one), ``division``, ``upazila``, ``union``.
+    Variants are unique within a kind, so no Spark-side ``distinct``."""
+    from . import dims
+
+    return (
+        [("district", v, d, d, DISTRICT_TO_DIVISION[d]) for v, d in sorted(set(DISTRICT_VARIANTS))]
+        + [("area", v, a, None, None) for v, a in sorted(set(dims.AREA_VARIANTS))]
+        + [("division", dv.lower(), dv, None, dv)
+           for dv in sorted({dv for _, dv in DISTRICT_DIVISION})]
+        + [("upazila", n.lower(), n, d, dv) for n, d, dv, _ in dims.UPAZILAS]
+        + [("union", n.lower(), n, d, dv) for n, _, d, dv, _ in dims.UNIONS]
+    )
+
+
+def surface_df(spark: SparkSession, area_vocab: DataFrame | None = None) -> DataFrame:
+    """The surface dictionary as one broadcastable frame. Optional
+    runtime ``area_vocab`` ``(variant, area)`` rows join as ``area``
+    rows and win a variant collision with the static seed."""
+    d = local_df(spark, surface_rows(), SURFACE_SCHEMA)
+    if area_vocab is None:
+        return d
+    is_area = F.col("kind") == "area"
+    areas = (
+        area_vocab.select("variant", F.col("area").alias("value"), F.lit(0).alias("prio"))
+        .unionByName(d.filter(is_area).select("variant", "value", F.lit(1).alias("prio")))
+        .groupBy("variant")
+        .agg(F.min_by("value", F.struct("prio", "value")).alias("value"))
+        .withColumn("kind", F.lit("area"))
+    )
+    return d.filter(~is_area).unionByName(areas, allowMissingColumns=True)
+
+
+def area_prefix_rows() -> list[tuple[str, int, str, str]]:
+    """Area prefix keys of the fuzzy area stages, as ``(pfx, width,
+    area_lc, area)``: every area's 4-char prefix (``width`` 4), plus the
+    3-char prefix of names 4-5 chars long (``width`` 3, the reference's
+    short-name rule)."""
+    from . import dims
+
+    lc = [(a.lower(), a) for a, _, _ in dims.AREAS]
+    return ([(k[:4], 4, k, a) for k, a in lc]
+            + [(k[:3], 3, k, a) for k, a in lc if 4 <= len(k) <= 5])
+
+
+def area_prefix_df(spark: SparkSession) -> DataFrame:
+    return local_df(spark, area_prefix_rows(), "pfx string, width int, area_lc string, area string")
 
 
 DISTRICT_TO_DIVISION = dict(DISTRICT_DIVISION)

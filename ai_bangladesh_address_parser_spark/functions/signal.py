@@ -34,14 +34,16 @@ evidence family of the DEFAULT_STAGES pipeline anchors on one of the
 classes above —
 
   * regex/FSM/house-road tiers: digit- or keyword-anchored;
-  * vocab joins (district / area / division / labeled ``area_vocab``):
-    exact surface must appear in the text; static surfaces are in the
-    pattern, runtime labeled vocabularies ride in via ``extra_terms``
+  * the one surface-dictionary join (`operators.extract.token_hits`:
+    the district, area, division, upazila and union surfaces of
+    `data.gazetteer.surface_df`, plus any labeled ``area_vocab``): the
+    exact surface must appear in the text. Every static surface
+    contains a district variant, a curated seed name, or itself — all
+    in the pattern (asserted over every dictionary variant by
+    ``test_gate.py::test_dim_names_are_covered``); runtime labeled
+    vocabularies ride in via ``extra_terms``
     (`plans.pipeline.LinkagePlan` wires its ``area_vocab`` variants
     through automatically);
-  * geo stage (upazila/union token joins): every dim name contains a
-    district variant, a curated seed name, or itself — all in the
-    pattern (asserted by ``test_gate.py::test_dim_names_are_covered``);
   * fuzzy-area back-extraction: candidate tokens share a 4-char (3 for
     short) prefix with an area — the anchored prefix alternation;
   * second-pass stages (position-area, unknown-value correction,
@@ -126,8 +128,8 @@ def _geo_closure_terms(vocab: list[str]) -> list[str]:
 
 
 def _fuzzy_prefix_terms() -> tuple[list[str], list[str]]:
-    """Prefix keys of the fuzzy stages: 4-char area prefixes (3-char for
-    short names, mirroring ``fuzzy_area_evidence``'s key rule) plus
+    """Prefix keys of the fuzzy stages: the area prefixes the fuzzy-area
+    stages join on (``gazetteer.area_prefix_rows``) plus
     4-char district-variant prefixes (the intact-prefix portion of the
     edit-distance-1 district recovery space). ASCII prefixes are
     word-start anchored (``\\b``) — fuzzy candidates are tokens, and the
@@ -135,9 +137,7 @@ def _fuzzy_prefix_terms() -> tuple[list[str], list[str]]:
     prefixes ride as plain substrings (Java's ``\\b`` is ASCII-word
     without UNICODE_CHARACTER_CLASS, so anchoring would disable them).
     """
-    areas = [a.lower() for a, _, _ in gz.AREAS]
-    pfx = {a[:4] for a in areas}
-    pfx |= {a[:3] for a in areas if 4 <= len(a) <= 5}
+    pfx = {p for p, *_ in gz.area_prefix_rows()}
     pfx |= {v[:4] for v, _ in gz.DISTRICT_VARIANTS if len(v) >= 4}
     bounded = sorted(p for p in pfx if p[:1].isascii())
     plain = sorted(p for p in pfx if not p[:1].isascii())

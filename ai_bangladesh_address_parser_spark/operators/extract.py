@@ -14,10 +14,16 @@ Scale notes:
   * All regex tiers are computed in ONE projection over the mention
     table (single pass, whole-stage codegen), then exploded to long
     format — no per-tier rescans.
-  * Vocabulary matches (district/area) are broadcast hash joins on
-    exploded tokens/bigrams — the cluster-scale equivalent of the
-    reference's trie lookups ("Technique #26").
-  * Nothing here shuffles except the final union's downstream groupBy.
+  * One token table, one dictionary join: ``token_hits`` explodes the
+    comma-parts, words and bigrams once and joins them once against
+    the broadcast surface dictionary (``data.gazetteer.surface_df``:
+    district, area, division, upazila and union surfaces). Every exact
+    vocabulary lookup (district, area, division, upazila, union) is a
+    filter of that one hit table — the cluster-scale equivalent of the
+    reference's single trie ("Technique #26").
+  * The per-mention votes (district end-of-address flag, area
+    position tiers, geo argmax, fuzzy best match) are mention-keyed
+    groupBys, so those shuffle; dim lookups never do.
 """
 
 from __future__ import annotations
@@ -274,15 +280,17 @@ def _token_candidates(mentions: DataFrame, id_col: str, text_col: str) -> DataFr
     return unigrams
 
 
-def vocab_evidence(mentions: DataFrame, id_col: str = "mention_id",
-                   text_col: str = "normalized",
-                   area_vocab: DataFrame | None = None) -> DataFrame:
-    """District + area evidence via broadcast joins on exploded tokens.
+def token_hits(mentions: DataFrame, id_col: str = "mention_id",
+               text_col: str = "normalized",
+               area_vocab: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
+    """The battery's token table and its one dictionary join.
 
-    Reference behavior modeled: district comma-part equality vs the
-    64-district variant vocabulary, end-of-address → higher confidence
-    (district_processor.py:695-1639); area vocabulary hits
-    (area_processor.py:93-133); division direct mentions.
+    Returns ``(toks, hits)``: ``toks`` is ``_token_candidates`` over
+    the mentions (``mention_id, part_idx, n_parts, part_clean, key``);
+    ``hits`` is ``toks`` joined on ``key`` against the broadcast
+    surface dictionary (adds ``kind, variant, value, district,
+    division``). Each is cut once, so the district, area, division,
+    fuzzy and geo consumers all read the same materialized rows.
 
     ``area_vocab``: optional extra ``(variant, area)`` rows — typically
     ``gazetteer_build.area_vocab_from_labeled`` over the batch's labeled
@@ -290,38 +298,31 @@ def vocab_evidence(mentions: DataFrame, id_col: str = "mention_id",
     lifecycle. On a variant collision the labeled vocabulary wins over
     the static seed (the corpus's own naming is authoritative for it).
     """
-    spark = mentions.sparkSession
-    # four consumer branches (district, area, fuzzy-district, division)
-    # would each re-run the token explode and its district join —
-    # materialize both once (measured 9.4s → ~3s for the stage)
     toks = _token_candidates(mentions, id_col, text_col).localCheckpoint(eager=False)
+    d = F.broadcast(gz.surface_df(mentions.sparkSession, area_vocab))
+    hits = toks.join(d, toks.key == d.variant, "inner").localCheckpoint(eager=False)
+    return toks, hits
 
-    dv = F.broadcast(gz.district_variants_df(spark))
-    dhits = toks.join(dv, toks.key == dv.variant, "inner").localCheckpoint(eager=False)
+
+def vocab_evidence(toks: DataFrame, hits: DataFrame) -> DataFrame:
+    """District + area + division evidence from the ``token_hits`` tables.
+
+    Reference behavior modeled: district comma-part equality vs the
+    64-district variant vocabulary, end-of-address → higher confidence
+    (district_processor.py:695-1639); area vocabulary hits
+    (area_processor.py:93-133); division direct mentions.
+    """
+    def ev(df: DataFrame, comp: str, conf: Column) -> DataFrame:
+        return df.select("mention_id", F.lit(comp).alias("component"), "value",
+                         conf.alias("confidence"), F.lit("regex").alias("source"))
+
+    dhits = hits.filter(F.col("kind") == "district")
     # last comma-part → 0.95 (end-of-address rule), else 0.90
-    dist_ev = (
-        dhits.groupBy("mention_id", "district")
-        .agg(F.max(F.col("part_idx") == F.col("n_parts") - 1).alias("at_end"))
-        .select(
-            "mention_id",
-            F.lit("district").alias("component"),
-            F.col("district").alias("value"),
-            F.when(F.col("at_end"), 0.95).otherwise(0.90).alias("confidence"),
-            F.lit("regex").alias("source"),
-        )
-    )
+    dist_ev = ev(
+        dhits.groupBy("mention_id", "value")
+        .agg(F.max(F.col("part_idx") == F.col("n_parts") - 1).alias("at_end")),
+        "district", F.when(F.col("at_end"), 0.95).otherwise(0.90))
 
-    av_rows = gz.area_variants_df(spark).withColumn("prio", F.lit(1))
-    if area_vocab is not None:
-        av_rows = (
-            area_vocab.select("variant", "area").withColumn("prio", F.lit(0))
-            .unionByName(av_rows)
-        )
-    av = F.broadcast(
-        av_rows.groupBy("variant")
-        .agg(F.min_by("area", F.struct("prio", "area")).alias("area"))
-    )
-    ahits = toks.join(av, toks.key == av.variant, "inner")
     # comma-part index of each district mention: an area hit in the part
     # directly before a city/district name takes the reference's massive
     # "before_city_immediate" boost (area_processor.py:784-791) — here a
@@ -344,14 +345,15 @@ def vocab_evidence(mentions: DataFrame, id_col: str = "mention_id",
         & ext.isin("housing society", "housing estate", "residential area",
                     "r/a", "model town"),
         F.initcap(F.col("part_clean")),
-    ).otherwise(F.col("area"))
-    area_ev = (
-        ahits.join(dist_parts, "mention_id", "left")
+    ).otherwise(F.col("value"))
+    area_ev = ev(
+        hits.filter(F.col("kind") == "area")
+        .join(dist_parts, "mention_id", "left")
         .withColumn(
             "before_city",
             F.coalesce(F.array_contains(F.col("dpi"), F.col("part_idx") + 1), F.lit(False)),
         )
-        .withColumn("area_val", area_val)
+        .withColumn("value", area_val)
         .withColumn(
             # the LAST comma-part is normally the city/district slot; when
             # no district matched anywhere in the mention, a vocabulary
@@ -360,30 +362,23 @@ def vocab_evidence(mentions: DataFrame, id_col: str = "mention_id",
             "last_noncity",
             (F.col("part_idx") == F.col("n_parts") - 1) & F.col("dpi").isNull(),
         )
-        .groupBy("mention_id", "area_val")
+        .groupBy("mention_id", "value")
         .agg(
             F.max(((F.col("part_idx") > 0) & (F.col("part_idx") < F.col("n_parts") - 1))
                   | F.col("last_noncity")).alias("mid"),
             F.max("before_city").alias("bc"),
             F.max("part_idx").alias("pmax"),
-        )
-        .select(
-            "mention_id",
-            F.lit("area").alias("component"),
-            F.col("area_val").alias("value"),
-            # base tier (before-city > middle > other) plus a small
-            # later-position bonus: with several vocabulary areas in one
-            # address, the locality nearest the district/end of the
-            # address is the one the reference's position factors pick
-            # (area_processor.py:784-791 before_city dominates, then
-            # position-in-address). Bonus is capped below the tier gaps
-            # so it only breaks ties within a tier.
-            (F.when(F.col("bc"), 0.92)
-              .when(F.col("mid"), 0.88).otherwise(0.85)
-             + F.least(F.col("pmax"), F.lit(8)) * F.lit(0.003)
-             ).alias("confidence"),
-            F.lit("regex").alias("source"),
-        )
+        ),
+        "area",
+        # base tier (before-city > middle > other) plus a small
+        # later-position bonus: with several vocabulary areas in one
+        # address, the locality nearest the district/end of the address
+        # is the one the reference's position factors pick
+        # (area_processor.py:784-791 before_city dominates, then
+        # position-in-address). Bonus is capped below the tier gaps so
+        # it only breaks ties within a tier.
+        F.when(F.col("bc"), 0.92).when(F.col("mid"), 0.88).otherwise(0.85)
+        + F.least(F.col("pmax"), F.lit(8)) * F.lit(0.003),
     )
 
     # fuzzy district recovery for the final comma-part: a trailing token
@@ -392,51 +387,25 @@ def vocab_evidence(mentions: DataFrame, id_col: str = "mention_id",
     # evidence when no exact variant matched — the reference's district
     # vocabulary bakes misspellings in (district_processor.py:292-319);
     # edit-distance-1 generalizes the same tolerance. Broadcast
-    # nested-loop against the ~130-row variant dim, pre-filtered by
-    # token length — linear in tokens, no shuffle.
-    has_exact = dhits.select("mention_id").distinct()
+    # nested-loop against the ~130 district rows of the dictionary,
+    # pre-filtered by token length — linear in tokens, no shuffle.
     last_toks = (
         # n_parts >= 2: only comma-structured (address-like) text — a
         # comma-less prose page would otherwise offer its every word
         toks.filter((F.col("part_idx") == F.col("n_parts") - 1)
                     & (F.col("n_parts") >= 2) & (F.length("key") >= 4))
-        .join(has_exact, "mention_id", "left_anti")
+        .join(dhits.select("mention_id"), "mention_id", "left_anti")
     )
-    fuzzy_dist = (
-        last_toks.join(
-            dv,
-            (F.abs(F.length(last_toks.key) - F.length(dv.variant)) <= 1)
-            & (F.levenshtein(last_toks.key, dv.variant) == 1),
-            "inner",
-        )
-        .groupBy("mention_id", "district")
-        .agg(F.count(F.lit(1)))
-        .select(
-            "mention_id",
-            F.lit("district").alias("component"),
-            F.col("district").alias("value"),
-            F.lit(0.75).alias("confidence"),
-            F.lit("regex").alias("source"),
-        )
-    )
-    dist_ev = dist_ev.unionByName(fuzzy_dist)
-
-    divs = F.broadcast(
-        gz.district_division_df(spark).select(F.lower("division").alias("variant"), "division").distinct()
-    )
-    div_ev = (
-        toks.join(divs, toks.key == divs.variant, "inner")
-        .groupBy("mention_id", "division")
-        .agg(F.count(F.lit(1)))
-        .select(
-            "mention_id",
-            F.lit("division").alias("component"),
-            F.col("division").alias("value"),
-            F.lit(0.95).alias("confidence"),
-            F.lit("regex").alias("source"),
-        )
-    )
-    return dist_ev.unionByName(area_ev).unionByName(div_ev)
+    dv = F.broadcast(gz.surface_df(toks.sparkSession).filter(F.col("kind") == "district"))
+    fuzzy_dist = last_toks.join(
+        dv,
+        (F.abs(F.length("key") - F.length("variant")) <= 1)
+        & (F.levenshtein("key", "variant") == 1),
+        "inner",
+    ).select("mention_id", "value").distinct()
+    div = hits.filter(F.col("kind") == "division").select("mention_id", "value").distinct()
+    return (dist_ev.unionByName(ev(fuzzy_dist, "district", F.lit(0.75)))
+            .unionByName(area_ev).unionByName(ev(div, "division", F.lit(0.95))))
 
 
 def gazetteer_evidence(evidence: DataFrame, gazetteer: DataFrame | None = None) -> DataFrame:
@@ -556,10 +525,8 @@ def gazetteer_evidence(evidence: DataFrame, gazetteer: DataFrame | None = None) 
 
 
 def fuzzy_area_evidence(
-    mentions: DataFrame,
+    toks: DataFrame,
     evidence: DataFrame,
-    id_col: str = "mention_id",
-    text_col: str = "normalized",
     min_charset_jaccard: float = 0.7,
 ) -> DataFrame:
     """J2: area back-extraction for mentions with NO area evidence.
@@ -567,8 +534,9 @@ def fuzzy_area_evidence(
     Reference semantics (gazetteer.py:191-377): fuzzy candidate = token
     whose 4-char prefix matches an area's 4-char prefix (3 chars for
     short names) AND whose character-set Jaccard vs the area name is
-    ≥ 0.7; confidence 0.75. Spark shape: anti-join to the no-area
-    subset → token explode → broadcast equi-join on the prefix key
+    ≥ 0.7; confidence 0.75. Spark shape: the ``token_hits`` token table
+    anti-joined to the no-area subset → broadcast equi-join on the
+    prefix key (``data.gazetteer.area_prefix_df``)
     (the fuzzy family collapses to a hash join on a coarse key + a
     cheap expression filter — no pairwise scan). Short area names
     (length 4-5) additionally key on a 3-char prefix, mirroring the
@@ -583,19 +551,16 @@ def fuzzy_area_evidence(
         whole text (the `_fuzzy_match_area` call inside validation,
         gazetteer.py:321-377) — full-text fuzzy here would override
         legitimate unknown areas with prefix-collision junk."""
-    spark = mentions.sparkSession
+    spark = toks.sparkSession
+    # every area name is also an area variant, so the static dictionary's
+    # area rows are the whole known vocabulary
     known_names = F.broadcast(
-        gz.areas_df(spark).select(F.lower("area").alias("k"))
-        .unionByName(gz.area_variants_df(spark).select(F.col("variant").alias("k")))
-        .distinct()
+        gz.surface_df(spark).filter(F.col("kind") == "area").select(F.col("variant").alias("k"))
     )
     # single scan of the evidence union feeds all three gates below
     area_ev = evidence.filter(F.col("component") == "area").select(
         "mention_id", F.lower("value").alias("k")).distinct().localCheckpoint(eager=False)
     has_area = area_ev.select("mention_id").distinct()
-    no_area = mentions.select(F.col(id_col).alias("mention_id"), F.col(text_col)).join(
-        has_area, "mention_id", "left_anti"
-    )
     unknown_vals = (
         area_ev.join(known_names, "k", "left_anti")
         .join(area_ev.join(known_names, "k").select("mention_id").distinct(),
@@ -608,11 +573,12 @@ def fuzzy_area_evidence(
         # core/charset tests, so the whole value survives uncorrected)
         .select("mention_id", F.explode(F.split("k", r"\s+")).alias("key"))
     )
-    toks = _token_candidates(no_area, "mention_id", text_col).select(
-        "mention_id", F.col("key")
-    ).unionByName(unknown_vals).filter(F.length("key") >= 3)
+    keys = (
+        toks.join(has_area, "mention_id", "left_anti").select("mention_id", "key")
+        .unionByName(unknown_vals).filter(F.length("key") >= 3)
+    )
     # tokens carry both prefix widths; 3-char tokens only the short key
-    toks = toks.select(
+    keys = keys.select(
         "mention_id", "key",
         F.explode(
             F.when(F.length("key") >= 4,
@@ -620,14 +586,8 @@ def fuzzy_area_evidence(
             .otherwise(F.array(F.substring("key", 1, 3)))
         ).alias("pfx"),
     )
-
-    areas_base = gz.areas_df(spark).select(F.lower("area").alias("area_lc"), "area")
-    areas = areas_base.withColumn("pfx", F.substring("area_lc", 1, 4)).unionByName(
-        areas_base.filter(F.length("area_lc").between(4, 5))
-        .withColumn("pfx", F.substring("area_lc", 1, 3))
-    )
-    cand = toks.join(
-        F.broadcast(areas), "pfx"
+    cand = keys.join(
+        F.broadcast(gz.area_prefix_df(spark)), "pfx"
     ).filter(F.col("key") != F.col("area_lc"))  # exact hits belong to vocab_evidence
 
     jac = charset_jaccard("key", "area_lc")
@@ -671,8 +631,9 @@ def position_area_evidence(
     district value per mention (pinned order: confidence desc, value
     asc — the reference reads Python list head), substring arithmetic
     slices the between-text, token explode → broadcast joins against
-    the area dim, window argmax. All expressions and broadcast hash
-    joins — no UDF, one mention-keyed shuffle."""
+    the width-4 rows of the area prefix table, window argmax. All
+    expressions and broadcast hash joins — no UDF, one mention-keyed
+    shuffle."""
     spark = mentions.sparkSession
 
     ev = evidence.filter(F.col("component").isin("area", "road", "district"))
@@ -710,17 +671,17 @@ def position_area_evidence(
         .filter(F.length("w") > 2)
     )
 
-    areas = gz.areas_df(spark).select(F.lower("area").alias("area_lc"), "area")
+    # one width-4 row per area: its lowercase name and 4-char prefix
+    areas = F.broadcast(gz.area_prefix_df(spark).filter(F.col("width") == 4))
     exact = (
-        toks.join(F.broadcast(areas), toks.w == areas.area_lc)
+        toks.join(areas, toks.w == areas.area_lc)
         .select("mention_id", "area", F.lit(0.90).alias("confidence"),
                 F.lit("gazetteer_position_exact").alias("source"))
     )
-    fz = areas.withColumn("pfx", F.substring("area_lc", 1, 4))
     jac = charset_jaccard("w", "area_lc")
     fuzzy = (
         toks.withColumn("pfx", F.substring("w", 1, 4))
-        .join(F.broadcast(fz), "pfx")
+        .join(areas, "pfx")
         .filter((F.col("w") != F.col("area_lc")) & (jac >= 0.7))
         .select("mention_id", "area", F.lit(0.80).alias("confidence"),
                 F.lit("gazetteer_position_fuzzy").alias("source"))
@@ -865,12 +826,7 @@ def predict_postal(wide: DataFrame, id_col: str = "mention_id") -> DataFrame:
     )
 
 
-def geo_evidence(
-    mentions: DataFrame,
-    evidence: DataFrame,
-    id_col: str = "mention_id",
-    text_col: str = "normalized",
-) -> DataFrame:
+def geo_evidence(hits: DataFrame, evidence: DataFrame) -> DataFrame:
     """J5: proactive geo extraction (geographic_validator.py:171-229).
 
     Scan the text for an upazila name (area 0.90,
@@ -887,17 +843,16 @@ def geo_evidence(
     evidence, and Stage-8 voting decides (geographic weight 0.95 ×
     0.90 beats a sub-vocabulary positional candidate).
 
-    Spark shape: one token explode over ALL mentions (the containment
-    gate above decides per hit, so no-area pre-filtering would change
-    semantics), two broadcast hash joins against the upazila/union dims
+    Spark shape: the upazila/union rows of the ``token_hits`` hit table
     (the reference's substring scan over dicts, restricted to token
-    boundaries), then a per-mention argmax. The reference takes the
+    boundaries; the containment gate above decides per hit, so no-area
+    pre-filtering would change semantics), then ONE per-mention argmax
+    over both kinds. Both kinds pass the same gate, so ranking upazila
+    first IS "union only where no upazila". The reference takes the
     first dict hit — we pin the total order (longest name, then
     greatest name).
     """
-    from ..data import geo_hierarchy as gh
-
-    spark = mentions.sparkSession
+    spark = hits.sparkSession
 
     # one scan of the evidence union serves every gate below (the
     # has()/value lookups otherwise re-derive the full union ~8 times —
@@ -913,92 +868,57 @@ def geo_evidence(
         return (ev_idx.filter(F.col("component") == comp)
                 .select("mention_id").distinct())
 
-    all_m = mentions.select(F.col(id_col).alias("mention_id"), F.col(text_col))
-    # toks feeds the upazila AND union joins; uhits/nhits below feed
-    # 3-4 union branches each — cut lineage so the full-corpus token
-    # explode is not replicated per consumer (same pattern as ev_idx)
-    toks = (_token_candidates(all_m, "mention_id", text_col)
-            .select("mention_id", "key").localCheckpoint(eager=False))
-
     # existing area evidence values, for the containment gate
-    area_ev_vals = (ev_idx.filter(F.col("component") == "area")
-                    .select("mention_id", F.col("lv").alias("av")))
+    area_vals = (ev_idx.filter(F.col("component") == "area")
+                 .select(F.col("mention_id").alias("av_id"), "lv"))
+    is_geo = F.col("kind").isin("upazila", "union")
 
-    def hits(dim: DataFrame) -> DataFrame:
-        d = dim.select(F.lower("name").alias("k"), "name", "district", "division")
-        raw = toks.join(F.broadcast(d), toks.key == d.k, "inner")
-        # drop hits whose name is already contained in an area value of
-        # the same mention (equi-join on mention_id + instr predicate —
-        # stays a hash join, the containment test rides along)
-        gated = raw.join(
-            area_ev_vals,
-            (raw.mention_id == area_ev_vals.mention_id)
-            & (F.instr(area_ev_vals.av, raw.k) > 0),
-            "left_anti",
-        )
+    def best(h: DataFrame, validated: bool) -> DataFrame:
         return (
-            gated.groupBy("mention_id")
+            h.groupBy("mention_id")
             .agg(F.max_by(
-                F.struct("name", "district", "division"),
-                F.struct(F.length("name"), F.col("name")),
+                F.struct("kind", "value", "district", "division"),
+                F.struct(F.col("kind") == "upazila", F.length("value"), F.col("value")),
             ).alias("m"))
+            .withColumn("validated", F.lit(validated))
         )
 
-    uhits = hits(gh.upazilas_df(spark)).localCheckpoint(eager=False)
-    nhits = (hits(gh.unions_df(spark))
-             .join(uhits.select("mention_id"), "mention_id", "left_anti")
-             .localCheckpoint(eager=False))
-
-    def emit(src_hits, comp, value_col, conf, source, only_missing=None):
-        out = src_hits
-        if only_missing:
-            out = out.join(has(only_missing), "mention_id", "left_anti")
-        return out.select(
-            "mention_id", F.lit(comp).alias("component"),
-            F.col(value_col).alias("value"),
-            F.lit(conf).alias("confidence"), F.lit(source).alias("source"),
-        )
-
+    # drop hits whose name is already contained in an area value of the
+    # same mention (equi-join on mention_id + instr predicate — stays a
+    # hash join, the containment test rides along)
+    gated = hits.filter(is_geo).join(
+        area_vals,
+        (F.col("mention_id") == F.col("av_id")) & (F.instr("lv", F.col("variant")) > 0),
+        "left_anti",
+    )
     # J3 auto-fill branch (geographic_validator.py:37-169): a mention
     # WITH area evidence whose value IS an upazila/union name gets its
     # area validated (0.95) and district/division filled when missing.
-    area_vals = (ev_idx.filter(F.col("component") == "area")
-                 .select("mention_id", F.col("lv").alias("vkey")).distinct())
+    geo = F.broadcast(gz.surface_df(spark).filter(is_geo))
+    vhits = area_vals.join(geo, F.col("lv") == F.col("variant")).withColumnRenamed(
+        "av_id", "mention_id")
+    src = best(gated, False).unionByName(best(vhits, True))
 
-    def val_hits(dim: DataFrame) -> DataFrame:
-        d = dim.select(F.lower("name").alias("k"), "name", "district", "division")
-        return (area_vals.join(F.broadcast(d), area_vals.vkey == d.k, "inner")
-                .groupBy("mention_id")
-                .agg(F.max_by(F.struct("name", "district", "division"),
-                              F.struct(F.length("name"), F.col("name"))).alias("m")))
+    validated = F.col("validated")
+    upazila = F.col("m.kind") == "upazila"
+    fill_conf = F.when(upazila, 0.95).otherwise(0.90)
+    fill_src = F.when(validated, "geographic_validated").otherwise(
+        F.concat(F.lit("geographic_inferred_from_"), F.col("m.kind")))
 
-    def val_ev(h: DataFrame, conf_area: float, conf_fill: float) -> DataFrame:
-        area = emit(h, "area", "m.name", conf_area, "geographic_validated")
-        dist = emit(h, "district", "m.district", conf_fill,
-                    "geographic_validated", "district")
-        dv = emit(h, "division", "m.division", conf_fill,
-                  "geographic_validated", "division")
-        return area.unionByName(dist).unionByName(dv)
-
-    vu_hits = val_hits(gh.upazilas_df(spark))
-    vu_ev = val_ev(vu_hits, 0.95, 0.95)
-    # unions only where no upazila-name match
-    vn_ev = val_ev(val_hits(gh.unions_df(spark)), 0.95, 0.90).join(
-        vu_hits.select("mention_id"), "mention_id", "left_anti")
+    def emit(comp, value, conf, source, only_missing=False):
+        out = src.join(has(comp), "mention_id", "left_anti") if only_missing else src
+        return out.select(
+            "mention_id", F.lit(comp).alias("component"), F.col(value).alias("value"),
+            conf.alias("confidence"), source.alias("source"),
+        )
 
     return (
-        emit(uhits, "area", "m.name", 0.90, "geographic_upazila_extraction")
-        .unionByName(emit(uhits, "district", "m.district", 0.95,
-                          "geographic_inferred_from_upazila", "district"))
-        .unionByName(emit(uhits, "division", "m.division", 0.95,
-                          "geographic_inferred_from_upazila", "division"))
-        .unionByName(emit(nhits, "area", "m.name", 0.85, "geographic_union_extraction"))
-        .unionByName(emit(nhits, "district", "m.district", 0.90,
-                          "geographic_inferred_from_union", "district"))
-        .unionByName(emit(nhits, "division", "m.division", 0.90,
-                          "geographic_inferred_from_union", "division"))
-        .unionByName(vu_ev)
-        .unionByName(vn_ev)
+        emit("area", "m.value",
+             F.when(validated, 0.95).when(upazila, 0.90).otherwise(0.85),
+             F.when(validated, "geographic_validated").otherwise(
+                 F.concat(F.lit("geographic_"), F.col("m.kind"), F.lit("_extraction"))))
+        .unionByName(emit("district", "m.district", fill_conf, fill_src, True))
+        .unionByName(emit("division", "m.division", fill_conf, fill_src, True))
     )
 
 
@@ -1128,7 +1048,8 @@ def extract_evidence(
     """Full stage 3-7 evidence generation. Input must already carry the
     normalized text column (see functions.normalize.normalize_expr).
 
-    Lineage is cut on the first-pass evidence before the gazetteer
+    Every exact vocabulary lookup reads the one ``token_hits`` table
+    pair. Lineage is cut on the first-pass evidence before the gazetteer
     enrichment fans out over it (6 broadcast-join branches) — without
     the cut the regex battery is re-evaluated per branch and the
     logical plan grows combinatorially. localCheckpoint rather than
@@ -1136,8 +1057,9 @@ def extract_evidence(
     repeated invocations in one driver (streaming micro-batches) don't
     accumulate cached plans."""
     stages = DEFAULT_STAGES if stages is None else frozenset(stages)
+    toks, hits = token_hits(mentions, id_col, text_col, area_vocab=area_vocab)
     base = regex_evidence(mentions, id_col, text_col, fsm="fsm" in stages).unionByName(
-        vocab_evidence(mentions, id_col, text_col, area_vocab=area_vocab)
+        vocab_evidence(toks, hits)
     ).unionByName(
         house_road_area_evidence(mentions, id_col=id_col, text_col=text_col)
     )
@@ -1149,7 +1071,7 @@ def extract_evidence(
     first_pass = base
     if "gazetteer" in stages:
         first_pass = first_pass.unionByName(
-            fuzzy_area_evidence(mentions, base, id_col, text_col)
+            fuzzy_area_evidence(toks, base)
         ).unionByName(
             position_area_evidence(mentions, base, id_col, text_col))
     first_pass = first_pass.localCheckpoint(eager=False)
@@ -1157,5 +1079,5 @@ def extract_evidence(
     if "gazetteer" in stages:
         out = out.unionByName(gazetteer_evidence(first_pass, gazetteer=gazetteer))
     if "geographic" in stages:
-        out = out.unionByName(geo_evidence(mentions, first_pass, id_col, text_col))
+        out = out.unionByName(geo_evidence(hits, first_pass))
     return out

@@ -39,8 +39,8 @@ def _mode(rec: DataFrame, col: str) -> DataFrame:
 
 
 def area_vocab_from_labeled(labeled: DataFrame, area_col: str = "area") -> DataFrame:
-    """Labeled records → ``(variant, area)`` vocabulary rows for
-    ``operators.extract.vocab_evidence``.
+    """Labeled records → ``(variant, area)`` vocabulary rows for the
+    surface dictionary (``extract_evidence``'s ``area_vocab``).
 
     The reference initializes its extractor with a gazetteer built from
     the batch's own labeled input (production_address_extractor.py:

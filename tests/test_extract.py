@@ -1,8 +1,15 @@
 """Component extraction golden tests over the 13 reference smoke
 addresses (reference tests/simple_test.py:63-76 — its de-facto suite)."""
 
+import json
+import os
+import re
+from types import SimpleNamespace
+from unittest import mock
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 
 from ai_bangladesh_address_parser_spark.functions.normalize import normalize_expr
 from ai_bangladesh_address_parser_spark.operators.extract import extract_evidence
@@ -40,20 +47,104 @@ GOLDEN = [
 ]
 
 
+EVIDENCE_COLS = ("mention_id", "component", "value", "confidence", "source")
+GOLDEN_EVIDENCE = os.path.join(os.path.dirname(__file__), "data", "golden_evidence.json")
+# Spark jobs that building and materializing the battery over the golden
+# addresses may run (measured 45; one lookup join per dim ran 64)
+BATTERY_JOB_BUDGET = 45
+
+
+def evidence_sort_key(row):
+    return tuple("" if v is None else v for v in row)
+
+
 @pytest.fixture(scope="module")
 def golden_evidence(spark):
-    """(input, evidence) frames over the golden addresses."""
-    df = spark.createDataFrame(
-        [(f"m{i:03d}", addr) for i, (addr, _) in enumerate(GOLDEN)],
-        ["mention_id", "text"],
-    ).withColumn("normalized", normalize_expr("text"))
-    return df, extract_evidence(df)
+    """The evidence battery over the golden addresses, built and
+    materialized once under one job group: the input, the lazy frame,
+    the materialized frame, the group's Spark job count, and the
+    optimized plan of every frame the battery cut lineage on."""
+    sc = spark.sparkContext
+    group = "golden-evidence-battery"
+    cut_plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording_checkpoint(df, *args, **kwargs):
+        cut_plans.append(df._jdf.queryExecution().optimizedPlan())
+        return checkpoint(df, *args, **kwargs)
+
+    sc.setJobGroup(group, "extract_evidence over the golden addresses")
+    try:
+        mentions = spark.createDataFrame(
+            [(f"m{i:03d}", addr) for i, (addr, _) in enumerate(GOLDEN)],
+            ["mention_id", "text"],
+        ).withColumn("normalized", normalize_expr("text"))
+        with mock.patch.object(DataFrame, "localCheckpoint", recording_checkpoint):
+            lazy = extract_evidence(mentions)
+        done = lazy.localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return SimpleNamespace(
+        mentions=mentions, lazy=lazy, done=done, cut_plans=cut_plans,
+        jobs=len(sc.statusTracker().getJobIdsForGroup(group)))
 
 
 @pytest.fixture(scope="module")
 def extracted(golden_evidence):
-    wide = resolved_wide(resolve_evidence(golden_evidence[1]))
+    wide = resolved_wide(resolve_evidence(golden_evidence.done))
     return {r["mention_id"]: r.asDict() for r in wide.collect()}
+
+
+def test_golden_evidence_rows(golden_evidence):
+    """The battery's evidence rows over the golden addresses equal the
+    pinned rows exactly, doubles included."""
+    got = sorted((tuple(r) for r in golden_evidence.done.select(*EVIDENCE_COLS).collect()),
+                 key=evidence_sort_key)
+    with open(GOLDEN_EVIDENCE, encoding="utf-8") as fh:
+        want = [tuple(r) for r in json.load(fh)]
+    assert got == want
+
+
+def test_golden_battery_job_budget(golden_evidence):
+    """Building plus materializing the battery over the golden addresses
+    runs no more Spark jobs than the pinned budget (read off the
+    fixture's job group, so the battery is not run a second time)."""
+    assert golden_evidence.jobs <= BATTERY_JOB_BUDGET, \
+        f"{golden_evidence.jobs} Spark jobs for the golden battery"
+
+
+def _plan_nodes(plan):
+    """Every node of a JVM logical plan."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _kind(node):
+    return node.getClass().getSimpleName()
+
+
+def test_battery_plan_has_one_token_join(golden_evidence):
+    """Plan lint over the battery (every cut frame plus the final one):
+    the comma-part/word token explode runs once, one broadcast equi-join
+    on ``key`` serves every exact vocabulary lookup, and no aggregate
+    runs over constant rows alone."""
+    plans = golden_evidence.cut_plans + [golden_evidence.lazy._jdf.queryExecution().optimizedPlan()]
+    nodes = [n for p in plans for n in _plan_nodes(p)]
+    explodes = [n for n in nodes
+                if _kind(n) == "Generate" and _kind(n.generator()) == "PosExplode"]
+    key_joins = [n.toString() for n in nodes if _kind(n) == "Join"
+                 and re.search(r"(?<!NOT \()\bkey#\d+ = |= key#\d+\b", n.condition().toString())]
+    const_aggs = [n.toString() for n in nodes if _kind(n) == "Aggregate"
+                  and {_kind(leaf) for leaf in _plan_nodes(n) if leaf.children().isEmpty()}
+                  == {"LocalRelation"}]
+    assert len(explodes) == 1, [n.toString() for n in explodes]
+    assert len(key_joins) == 1 and "broadcast" in key_joins[0], key_joins
+    assert not const_aggs, const_aggs
 
 
 def _python_rdd_leaves(df):
@@ -71,10 +162,9 @@ def test_evidence_battery_scans_no_python_backed_dim(golden_evidence):
     ExistingRDD scan in ``extract_evidence``'s optimized plan is the
     input's own. No gazetteer or geo dim reaches the battery as a
     pickled RDD (they are LocalRelations, see gazetteer.local_df)."""
-    mentions, evidence = golden_evidence
-    own = {leaf.rdd().id() for leaf in _python_rdd_leaves(mentions)}
+    own = {leaf.rdd().id() for leaf in _python_rdd_leaves(golden_evidence.mentions)}
     assert len(own) == 1
-    extra = [leaf.output().toString() for leaf in _python_rdd_leaves(evidence)
+    extra = [leaf.output().toString() for leaf in _python_rdd_leaves(golden_evidence.lazy)
              if leaf.rdd().id() not in own]
     assert not extra, f"Python-backed scans in the evidence battery: {extra}"
 
@@ -113,6 +203,7 @@ def test_fuzzy_area_back_extraction(spark):
         extract_evidence,
         fuzzy_area_evidence,
         regex_evidence,
+        token_hits,
         vocab_evidence,
     )
 
@@ -121,8 +212,9 @@ def test_fuzzy_area_back_extraction(spark):
          ("f2", "House 9, Gulshan, Dhaka")],
         ["mention_id", "text"],
     ).withColumn("normalized", normalize_expr("text"))
-    base = regex_evidence(df).unionByName(vocab_evidence(df))
-    fz = fuzzy_area_evidence(df, base).collect()
+    toks, hits = token_hits(df)
+    base = regex_evidence(df).unionByName(vocab_evidence(toks, hits))
+    fz = fuzzy_area_evidence(toks, base).collect()
     assert {(r.mention_id, r.value) for r in fz} == {("f1", "Dhanmondi")}
     # end-to-end: resolve picks the fuzzy area and gazetteer fills postal
     wide = resolved_wide(resolve_evidence(extract_evidence(df)))

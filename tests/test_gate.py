@@ -73,21 +73,18 @@ def test_residual_class_documented():
 
 
 def test_dim_names_are_covered():
-    """Soundness-by-construction: every geo/area dim surface the exact
-    token joins can match contains a gate term, so any text containing
-    it passes — dim regeneration cannot silently open a gap."""
+    """Soundness-by-construction: every surface the exact token join can
+    match (each variant of the surface dictionary, whatever its kind)
+    contains a gate term, so any text containing it passes — dim
+    regeneration, or a kind added to the dictionary, cannot silently
+    open a gap. Village names ride along for the geo closure terms."""
     import re
 
     from ai_bangladesh_address_parser_spark.data import dims
+    from ai_bangladesh_address_parser_spark.data.gazetteer import surface_rows
 
     pat = re.compile(SIGNAL_PATTERN)
-    names = (
-        [n for n, *_ in dims.UPAZILAS]
-        + [n for n, *_ in dims.UNIONS]
-        + [n for n, *_ in dims.VILLAGES]
-        + [a for a, _, _ in dims.AREAS]
-        + [v for v, _ in dims.AREA_VARIANTS]
-    )
+    names = [v for _, v, *_ in surface_rows()] + [n for n, *_ in dims.VILLAGES]
     missed = [n for n in names if not pat.search(n.lower())]
     assert missed == [], f"gate misses dim surfaces: {missed[:10]}"
 

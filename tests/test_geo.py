@@ -10,6 +10,7 @@ from ai_bangladesh_address_parser_spark.operators.extract import (
     full_hierarchy,
     geo_evidence,
     predict_postal,
+    token_hits,
 )
 
 
@@ -100,7 +101,7 @@ def test_geo_evidence_gating(spark):
          ("m6", "area", "Savar Bazar", 0.9, "regex")],
         "mention_id string, component string, value string, confidence double, source string")
     rows = {(r["mention_id"], r["component"]): (r["value"], r["confidence"], r["source"])
-            for r in geo_evidence(mentions, ev).collect()}
+            for r in geo_evidence(token_hits(mentions)[1], ev).collect()}
     assert rows[("m1", "area")] == ("Savar", 0.90, "geographic_upazila_extraction")
     assert rows[("m1", "district")] == ("Dhaka", 0.95, "geographic_inferred_from_upazila")
     assert rows[("m2", "area")] == ("Savarhat1", 0.85, "geographic_union_extraction")

@@ -238,9 +238,10 @@ def test_oracle_integral_columns_fetch_as_integers(frames, sf_dir):
 
 def test_constant_frames_plan_as_local_relation(spark, tmp_path):
     """Every frame the package builds from Python constants (the 8
-    gazetteer/geo dims, the gate's overflow vocabulary, the empty edge
-    table) must plan as a JVM LocalRelation: scanning or broadcasting
-    it then starts no Python worker."""
+    gazetteer/geo dims, the surface dictionary, the area prefix table,
+    the gate's overflow vocabulary, the empty edge table) must plan as
+    a JVM LocalRelation: scanning or broadcasting it then starts no
+    Python worker."""
     from ai_bangladesh_address_parser_spark.data import gazetteer as gz
     from ai_bangladesh_address_parser_spark.data import geo_hierarchy as gh
     from ai_bangladesh_address_parser_spark.plans.incremental import IncrementalLinker
@@ -248,7 +249,7 @@ def test_constant_frames_plan_as_local_relation(spark, tmp_path):
 
     frames = {f.__name__: f(spark) for f in (
         gz.district_division_df, gz.district_variants_df, gz.areas_df,
-        gz.area_variants_df, gz.postal_codes_df,
+        gz.area_variants_df, gz.postal_codes_df, gz.surface_df, gz.area_prefix_df,
         gh.upazilas_df, gh.unions_df, gh.villages_df)}
     plan = LinkagePlan(spark)
     plan._gate_extra = ((), ("qxzoverflow",))  # force the semi-join path
