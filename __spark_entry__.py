@@ -785,17 +785,11 @@ def q_a3_batch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_a4_confidence_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: confidence banding + histogram (pseudo-confidence derived
     from l_discount so the bands are populated)."""
-    from ai_bangladesh_address_parser_spark.functions.format import confidence_band_expr
+    from ai_bangladesh_address_parser_spark.functions.format import confidence_histogram
 
     li = _t(spark, sf_dir, "lineitem")
     conf = F.round(0.5 + F.col("l_discount") * 5, 6)
-    return (
-        li.select(conf.alias("overall_confidence"))
-        .withColumn("band", confidence_band_expr())
-        .groupBy("band")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("band")
-    )
+    return confidence_histogram(li.select(conf.alias("overall_confidence")))
 
 
 def q_a5_gazetteer_build(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -66,11 +66,8 @@ def _read(spark, path: str, fmt: str):
     return spark.read.format(fmt).load(path)
 
 
-def _write(df, path: str, fmt: str, partition_by: list[str] | None = None):
-    w = df.write.mode("overwrite").format(fmt)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
+def _write(df, path: str, fmt: str):
+    df.write.mode("overwrite").format(fmt).save(path)
 
 
 def cmd_link(args) -> int:
@@ -107,14 +104,13 @@ def cmd_extract(args) -> int:
 
 
 def cmd_split(args) -> int:
-    from ai_bangladesh_address_parser_spark.functions.format import confidence_band_expr
     from ai_bangladesh_address_parser_spark.plans.pipeline import LinkagePlan
+    from ai_bangladesh_address_parser_spark.sources.pages import write_banded
 
     spark = _session("abap-split")
     pages = _read(spark, args.input, args.format)
     wide = LinkagePlan(spark, profile=args.profile).extract(pages)
-    banded = wide.withColumn("band", confidence_band_expr())
-    _write(banded, args.output, args.format, partition_by=["band"])
+    write_banded(wide, args.output, fmt=args.format)
     return 0
 
 

@@ -1,10 +1,10 @@
 """Output-side scalar surfaces: T11 formatting, P3 validation, J7
-suggest, A2-A4 statistics — all Catalyst expressions / tiny DataFrame
-queries over the resolved-components table.
+suggest, A4 confidence banding — all Catalyst expressions / tiny
+DataFrame queries over the resolved-components table.
 
 Reference citations: format → src/core/utils/address_utils.py:69-128;
-validate → :9-66; suggest → :209-259; batch stats → :262-324;
-confidence banding → src/regex/house_number_processor.py:1192-1240.
+validate → :9-66; suggest → :209-259; confidence banding →
+src/regex/house_number_processor.py:1192-1240.
 """
 
 from __future__ import annotations
@@ -98,37 +98,6 @@ def suggest(
         .orderBy(F.col("similarity").desc(), F.col(name_col))
         .limit(k)
     )
-
-
-def batch_stats(resolved: DataFrame) -> dict[str, DataFrame]:
-    """A3: corpus-level stats over the wide resolved table — average
-    completeness, per-component missing counts, top district/division/
-    area frequencies. Each a one-aggregation DataFrame."""
-    nonempty = [F.when(_nz(c).isNotNull(), 1).otherwise(0) for c in ALL_COMPONENTS]
-    completeness = sum(nonempty[1:], nonempty[0]) / F.lit(float(len(ALL_COMPONENTS)))
-    overall = resolved.agg(
-        F.count(F.lit(1)).alias("n_mentions"),
-        F.round(F.avg(completeness), 6).alias("avg_completeness"),
-        F.round(F.avg("overall_confidence"), 6).alias("avg_confidence"),
-        *[
-            F.sum(F.when(_nz(c).isNull(), 1).otherwise(0)).alias(f"missing_{c}")
-            for c in ALL_COMPONENTS
-        ],
-    )
-    def top(col: str, n: int) -> DataFrame:
-        return (
-            resolved.filter(_nz(col).isNotNull())
-            .groupBy(col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), F.col(col))
-            .limit(n)
-        )
-    return {
-        "overall": overall,
-        "top_districts": top("district", 10),
-        "top_divisions": top("division", 8),
-        "top_areas": top("area", 20),
-    }
 
 
 CONFIDENCE_BANDS = [

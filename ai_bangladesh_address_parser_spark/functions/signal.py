@@ -36,14 +36,11 @@ classes above —
   * regex/FSM/house-road tiers: digit- or keyword-anchored;
   * the one surface-dictionary join (`operators.extract.token_hits`:
     the district, area, division, upazila and union surfaces of
-    `data.gazetteer.surface_df`, plus any labeled ``area_vocab``): the
-    exact surface must appear in the text. Every static surface
-    contains a district variant, a curated seed name, or itself — all
-    in the pattern (asserted over every dictionary variant by
-    ``test_gate.py::test_dim_names_are_covered``); runtime labeled
-    vocabularies ride in via ``extra_terms``
-    (`plans.pipeline.LinkagePlan` wires its ``area_vocab`` variants
-    through automatically);
+    `data.gazetteer.surface_df`): the exact surface must appear in the
+    text. Every surface contains a district variant, a curated seed
+    name, or itself — all in the pattern (asserted over every
+    dictionary variant by
+    ``test_gate.py::test_dim_names_are_covered``);
   * fuzzy-area back-extraction: candidate tokens share a 4-char (3 for
     short) prefix with an area — the anchored prefix alternation;
   * second-pass stages (position-area, unknown-value correction,
@@ -72,7 +69,6 @@ the page count. Skipped-row counts ride the pipeline's metrics
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -176,46 +172,9 @@ def _trie_regex(words: list[str]) -> str:
     return emit(trie)
 
 
-# Pattern-literal budget for runtime extra_terms (sum of term lengths).
-# A labeled vocabulary can, at corpus scale, carry 10^5 surfaces; folding
-# them all would produce a multi-megabyte regex literal and an unbounded
-# driver-side string. Terms beyond the budget must be matched by the
-# caller through a broadcast token semi-join instead (the pipeline's
-# ``LinkagePlan._apply_gate`` does) — same soundness contract, bounded
-# pattern. The default budget folds ~2-4k typical surfaces, far above
-# any observed labeled vocabulary, so the common case stays one pure
-# codegen rlike.
-GATE_FOLD_MAX_CHARS = 20_000
-
-
-def split_fold_terms(
-    terms, budget_chars: int = GATE_FOLD_MAX_CHARS
-) -> tuple[tuple[str, ...], tuple[str, ...]]:
-    """Deterministic (folded, overflow) split of runtime vocabulary
-    terms: lowercase, dedupe, sort, then fold in order until the
-    cumulative character budget is spent. The folded tuple feeds
-    ``address_signal_expr(extra_terms=...)``; the overflow tuple is the
-    caller's semi-join set."""
-    folded, overflow, used = [], [], 0
-    for t in sorted({t.lower() for t in terms if t}):
-        used += len(t) + 1
-        (folded if used <= budget_chars else overflow).append(t)
-    return tuple(folded), tuple(overflow)
-
-
-@lru_cache(maxsize=32)
-def _build_pattern(extra_terms: tuple[str, ...] = ()) -> str:
-    extra_len = sum(len(t) + 1 for t in extra_terms)
-    if extra_len > 2 * GATE_FOLD_MAX_CHARS:
-        raise ValueError(
-            f"extra_terms would fold {extra_len} chars into the gate "
-            f"pattern (budget {GATE_FOLD_MAX_CHARS}); split with "
-            "split_fold_terms() and route the overflow through a "
-            "broadcast token semi-join (see LinkagePlan._apply_gate)"
-        )
+def _build_pattern() -> str:
     vocab = _vocab_terms()
     subs = set(_KEYWORDS) | set(vocab) | set(_geo_closure_terms(vocab))
-    subs |= {t.lower() for t in extra_terms if t}
     bounded, plain = _fuzzy_prefix_terms()
     subs |= set(plain)
     # subs is seeded from _KEYWORDS and must never be empty: an empty
@@ -235,18 +194,11 @@ def _build_pattern(extra_terms: tuple[str, ...] = ()) -> str:
 SIGNAL_PATTERN = _build_pattern()
 
 
-def address_signal_expr(
-    text_col: str, extra_terms: tuple[str, ...] | None = None
-) -> Column:
+def address_signal_expr(text_col: str) -> Column:
     """Boolean Column: True iff the text shows any cheap address signal.
 
     Pure codegen (`lower` + `rlike` with a foldable pattern) — no
     Python, no join, no shuffle; safe to evaluate inline in the scan
     projection of a 10^12-row table.
-
-    ``extra_terms``: additional lowercased surfaces the pattern must
-    keep — pass the distinct variants of any runtime ``area_vocab`` so
-    labeled-vocabulary joins stay reachable through the gate.
     """
-    pattern = _build_pattern(tuple(sorted(extra_terms)) if extra_terms else ())
-    return F.lower(F.col(text_col)).rlike(pattern)
+    return F.lower(F.col(text_col)).rlike(SIGNAL_PATTERN)

@@ -21,7 +21,7 @@ Everything is JVM expressions — xxhash64/soundex/posexplode; no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MINHASH_SEEDS = 12  # k minhashes
@@ -139,7 +139,7 @@ def blocking_keys(
     house_col: str = "house_number",
     area_col: str = "area",
     use_minhash: bool = True,
-    band_gate=None,
+    band_gate: Column | None = None,
 ) -> DataFrame:
     """→ (mention_id, block_key), one row per key the mention blocks on.
 
@@ -237,10 +237,7 @@ def blocking_keys(
             # mentions carry no extractable structure, so banding them
             # only mass-pairs prose pages — they keep any component keys
             # above (vacuously none) and stay singletons downstream.
-            # Column: pure predicate filter. Callable (df → df): the
-            # pipeline's _apply_gate, which also recovers overflow-
-            # vocabulary rows via its broadcast token semi-join.
-            mh_in = band_gate(mh_in) if callable(band_gate) else mh_in.filter(band_gate)
+            mh_in = mh_in.filter(band_gate)
         out = out.unionByName(
             minhash_band_keys(mh_in, id_col=id_col, text_col=text_col)
         ).distinct()

@@ -106,38 +106,6 @@ def drop_exact_duplicates(
 
 # --- minhash + LSH ---------------------------------------------------------
 
-def minhash_sig_from_array(arr_col: str, n_hashes: int = 8) -> Column:
-    """array<bigint> minhash signature over a *materialized* string
-    array column. Seeds are the integers 0..n-1 — fixed, portable.
-
-    Built as one SQL-parsed expression with named lambda variables (see
-    operators.blocking for why not Column-API lambdas). Takes a column
-    NAME on purpose: inlining the shingle-building expression here
-    would re-evaluate it once per seed (measured 8× slower at k=8 —
-    the shingle construction, not the hashing, dominates).
-    """
-    return F.expr(
-        f"transform(sequence(0, {n_hashes - 1}), s -> "
-        f"array_min(transform(`{arr_col}`, "
-        f"w -> cast(conv(substring(md5(concat(cast(s as string), '|', w)), 1, 14), 16, 10) as bigint))))"
-    )
-
-
-def with_minhash_sig(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "_sig",
-    n_hashes: int = 8,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """df + minhash signature column, shingles evaluated once per row."""
-    return (
-        df.withColumn("_mh_shingles", shingles_expr(text_col, shingle_k))
-        .withColumn(out_col, minhash_sig_from_array("_mh_shingles", n_hashes))
-        .drop("_mh_shingles")
-    )
-
-
 def minhash_signatures_long(
     docs: DataFrame,
     id_col: str = "doc_id",

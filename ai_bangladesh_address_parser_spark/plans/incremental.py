@@ -348,9 +348,11 @@ class IncrementalLinker:
             use_minhash=self.use_minhash, gate=self.gate,
             max_block=self.max_block,
         )
-        # materialize the extraction once: the mention map, the node
-        # delta, and the state writes all reuse it
-        wide = plan.extract(pages).localCheckpoint(eager=True)
+        # extract() ends in the plan's stage store, which (no checkpoint
+        # dir) cuts lineage with an eager localCheckpoint: the mention
+        # map, the node delta, and the state writes all reuse that one
+        # materialization
+        wide = plan.extract(pages)
         delta_mentions = wide.select("url", "mention_id", "norm_key")
         # materialized by the plan's stage store
         delta_nodes = plan.unique_mentions(wide)

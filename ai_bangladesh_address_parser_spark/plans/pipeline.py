@@ -29,9 +29,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..data.gazetteer import local_df
 from ..functions.normalize import norm_key_expr, normalize_expr
-from ..functions.signal import address_signal_expr, split_fold_terms
+from ..functions.signal import address_signal_expr
 from ..operators.blocking import (
     blocking_keys,
     candidate_pairs,
@@ -197,7 +196,10 @@ class LinkagePlan:
     path); pass ``scorer="difflib"`` for reference-oracle parity runs.
     ``profile`` names the optional extraction stages (fast/balanced/
     accurate/minimal, reference tools/control_stages.py:45-69); None
-    runs the default stage set.
+    runs the default stage set. ``gate`` filters the S1 battery input
+    and the S2 band keys with the one constant
+    ``functions.signal.address_signal_expr`` predicate; ``gate=False``
+    is the exact reference run.
     """
 
     def __init__(
@@ -207,7 +209,6 @@ class LinkagePlan:
         threshold: float = 0.85,
         store: StageStore | None = None,
         use_minhash: bool = True,
-        area_vocab: DataFrame | None = None,
         profile: str | None = None,
         gate: bool = True,
         max_block: int | None = 100_000,
@@ -217,80 +218,23 @@ class LinkagePlan:
         self.threshold = threshold
         self.store = store or StageStore(base=None)
         self.use_minhash = use_minhash
-        # Address-likelihood gate (functions/signal.py): skip the deep
-        # extraction battery and minhash banding for mentions with zero
-        # cheap signal (no digit, no keyword, no vocab/geo surface, no
-        # fuzzy-area prefix). Output is identical up to the documented
-        # ED-1-district residual (signal.py soundness contract;
-        # gate-equivalence pytest); only the work for pure-prose pages
-        # disappears. Skip counts ride metrics().
+        # Address-likelihood gate (functions/signal.py): one constant
+        # codegen predicate that skips the deep extraction battery and
+        # minhash banding for mentions with zero cheap signal (no digit,
+        # no keyword, no vocab/geo surface, no fuzzy-area prefix).
+        # Output is identical up to the documented ED-1-district
+        # residual (signal.py soundness contract; gate-equivalence
+        # pytest); only the work for pure-prose pages disappears. Skip
+        # counts ride metrics().
         self.gate = gate
         # blocks whose total membership exceeds this never generate
         # pairs (candidate_pairs drops them); surfaced as a plan knob so
         # the incremental linker's retroactive cap can be compared
         # against a one-shot run at the same setting
         self.max_block = max_block
-        self._gate_extra: tuple[str, ...] | None = None
         self.stages = DEFAULT_STAGES if profile is None else PROFILES[profile]
-        # (variant, area) rows derived from a labeled corpus
-        # (gazetteer_build.area_vocab_from_labeled) — the reference
-        # builds its gazetteer from the batch's own labeled input, so
-        # candidate generation recognizes every labeled area
-        self.area_vocab = area_vocab
         self.observations: dict[str, Observation] = {}
         self.gate_stats: dict | None = None
-
-    def _gate_terms(self) -> tuple[tuple[str, ...], tuple[str, ...]]:
-        """(folded, overflow) split of the runtime ``area_vocab``
-        variants. Folded terms ride in the gate pattern literal so
-        labeled-vocabulary joins stay reachable (signal.py soundness
-        contract); terms beyond the pattern budget (a 10^5-surface
-        labeled vocabulary would otherwise fold a multi-MB regex and an
-        unbounded driver literal) are matched by ``_apply_gate``'s
-        broadcast token semi-join instead. Collected once per plan."""
-        if self._gate_extra is None:
-            terms = tuple(
-                r["variant"]
-                for r in self.area_vocab.select("variant").distinct().collect()
-            ) if self.area_vocab is not None else ()
-            self._gate_extra = split_fold_terms(terms)
-        return self._gate_extra
-
-    def _gate_expr(self, text_col: str = "normalized"):
-        """Gate predicate over the static pattern + folded runtime terms
-        (pure codegen rlike). Callers that must also honor overflow
-        terms use ``_apply_gate``."""
-        folded, _ = self._gate_terms()
-        return address_signal_expr(text_col, extra_terms=folded or None)
-
-    def _apply_gate(self, df: DataFrame, id_col: str,
-                    text_col: str = "normalized") -> DataFrame:
-        """Gate as a DataFrame filter. With no overflow vocabulary this
-        is exactly ``df.filter(_gate_expr())`` — one codegen predicate,
-        no join. Overflow surfaces are recovered by a broadcast token
-        semi-join over the SAME key derivation the vocabulary join uses
-        (``operators.extract._token_candidates``: comma-parts, unigrams,
-        dash-split words, bigrams), so every mention the ``area_vocab``
-        join could hit still passes — the semi-join reachability is
-        bit-for-bit the join's reachability, which is STRONGER than the
-        folded-pattern substring approximation it replaces."""
-        base = self._gate_expr(text_col)
-        _, overflow = self._gate_terms()
-        if not overflow:
-            return df.filter(base)
-        from ..operators.extract import _token_candidates
-
-        ov = F.broadcast(local_df(
-            self.spark, [(t,) for t in overflow], "variant string"))
-        passed = df.filter(base)
-        rest = df.filter(~base)
-        hit = (
-            _token_candidates(rest, id_col, text_col)
-            .join(ov, F.col("key") == F.col("variant"), "left_semi")
-            .select(F.col("mention_id").alias(id_col))
-            .distinct()
-        )
-        return passed.unionByName(rest.join(hit, id_col, "left_semi"))
 
     # -- S1 ---------------------------------------------------------------
     # target battery rows per task: the deep battery costs ~1.5 ms/row,
@@ -342,41 +286,29 @@ class LinkagePlan:
         uniq = (keyed.select("norm_key", "normalized")
                 .dropDuplicates(["norm_key"])
                 .localCheckpoint(eager=False))
+        sig = address_signal_expr("normalized")
+        live = uniq.filter(sig) if self.gate else uniq
         # skip the EAGER stats aggregate when s1 will load from its
         # stored snapshot — otherwise a resumed run pays the full pages
         # scan + dedup shuffle just to discard the plan (gate_stats
         # stays None on resume; the stored stage is the source of truth
         # for its rows)
-        live = self._apply_gate(uniq, "norm_key") if self.gate else uniq
         if self.gate and not self.store.will_resume(self.spark, "s1_mentions"):
-            if self._gate_terms()[1]:
-                # overflow semi-join in play: the skip count is not a
-                # pure column aggregate — count kept rows off the
-                # (reused-downstream) gated frame instead
-                live = live.localCheckpoint(eager=False)
-                total = uniq.count()
-                self.gate_stats = {
-                    "unique_mentions": total,
-                    "gate_skipped": total - live.count(),
-                }
-            else:
-                # one scalar metrics aggregate over the (materialized-
-                # anyway) unique-mention checkpoint; Observation can't
-                # ride here — the CollectMetrics node executes during
-                # the untracked checkpoint materialization and reports
-                # empty metrics
-                sig = self._gate_expr()
-                stats = uniq.agg(
-                    F.count(F.lit(1)).alias("unique_mentions"),
-                    F.sum((~sig).cast("long")).alias("gate_skipped"),
-                ).first()
-                self.gate_stats = {
-                    "unique_mentions": stats["unique_mentions"],
-                    "gate_skipped": stats["gate_skipped"] or 0,
-                }
+            # one scalar metrics aggregate over the (materialized-anyway)
+            # unique-mention checkpoint; Observation can't ride here —
+            # the CollectMetrics node executes during the untracked
+            # checkpoint materialization and reports empty metrics
+            stats = uniq.agg(
+                F.count(F.lit(1)).alias("unique_mentions"),
+                F.sum((~sig).cast("long")).alias("gate_skipped"),
+            ).first()
+            self.gate_stats = {
+                "unique_mentions": stats["unique_mentions"],
+                "gate_skipped": stats["gate_skipped"] or 0,
+            }
         live = self._battery_repartition(live, "norm_key")
         ev = extract_evidence(live, id_col="norm_key", text_col="normalized",
-                              area_vocab=self.area_vocab, stages=self.stages)
+                              stages=self.stages)
         wide_u = resolved_wide(resolve_evidence(ev))  # mention_id == norm_key
         wide = keyed.join(
             wide_u.withColumnRenamed("mention_id", "norm_key"), "norm_key", "left"
@@ -412,10 +344,7 @@ class LinkagePlan:
             postal_col="postal_code",
             district_col="district",
             use_minhash=self.use_minhash,
-            # callable form: honors overflow vocabulary via the token
-            # semi-join (a bare Column can't express the join)
-            band_gate=(lambda df: self._apply_gate(df, id_col))
-            if self.gate else None,
+            band_gate=address_signal_expr("normalized") if self.gate else None,
         )
 
     def block(self, nodes: DataFrame, id_col: str = "mention_id") -> DataFrame:

@@ -105,15 +105,6 @@ def test_fuzzy_area_candidates_are_covered():
             assert pat.search(f"prose {probe} prose"), (a, probe)
 
 
-def test_extra_terms_extend_pattern(spark):
-    df = spark.createDataFrame([("living in niketonx lately",)], "text string")
-    base = df.select(address_signal_expr("text").alias("s")).first()["s"]
-    ext = df.select(
-        address_signal_expr("text", extra_terms=("niketonx",)).alias("s")
-    ).first()["s"]
-    assert (base, ext) == (False, True)
-
-
 def _mixed_corpus(spark, n_pages=240):
     pages, truth = synth_pages(spark, n_pages=n_pages, n_entities=30)
     # prose negatives PLUS the former gap class: signal-bearing texts
@@ -186,110 +177,3 @@ def test_gate_metrics_and_singletons(spark):
     m = plan.metrics()["s1_gate"]
     assert m["gate_skipped"] > 0
     assert m["gate_skipped"] <= m["unique_mentions"]
-
-
-def test_gate_keeps_area_vocab_surfaces(spark):
-    """A labeled area_vocab variant unknown to the static pattern must
-    pass the gate and produce identical output to the ungated run."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    av = spark.createDataFrame(
-        [("zzoloka", "Zzoloka")], "variant string, area string"
-    )
-    pages = spark.createDataFrame(
-        [("p://1", "prose text, zzoloka, more prose")],
-        "url string, text string",
-    ).select(
-        "url",
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        F.encode("text", "UTF-8").alias("html"),
-        "text",
-        F.lit("en").alias("lang"),
-    )
-    rows = {}
-    for gate in (True, False):
-        plan = LinkagePlan(spark, gate=gate, area_vocab=av)
-        rows[gate] = sorted(
-            (r["mention_id"], r["area"])
-            for r in plan.extract(pages).select("mention_id", "area").collect()
-        )
-    assert rows[True] == rows[False]
-    assert rows[True][0][1] == "Zzoloka"
-
-
-# --- bounded vocabulary folding (round-4: pattern-size budget) -----------
-
-def _page_df(spark, rows):
-    return spark.createDataFrame(rows, "url string, text string").select(
-        "url",
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        F.encode("text", "UTF-8").alias("html"),
-        "text",
-        F.lit("en").alias("lang"),
-    )
-
-
-def _big_vocab(n=50_000):
-    # deterministic synthetic surfaces, none matching the static pattern
-    return [(f"zzv{i:05d}ka", f"Zzv{i:05d}ka") for i in range(n)]
-
-
-def test_split_fold_terms_budget():
-    from ai_bangladesh_address_parser_spark.functions.signal import (
-        GATE_FOLD_MAX_CHARS,
-        _build_pattern,
-        split_fold_terms,
-    )
-
-    terms = [v for v, _ in _big_vocab()]
-    folded, overflow = split_fold_terms(terms)
-    assert len(folded) + len(overflow) == len(terms)
-    assert overflow, "50k terms must overflow the fold budget"
-    assert sum(len(t) + 1 for t in folded) <= GATE_FOLD_MAX_CHARS
-    # deterministic: same input (any order) → same split
-    import random
-
-    shuffled = terms[:]
-    random.Random(7).shuffle(shuffled)
-    assert split_fold_terms(shuffled) == (folded, overflow)
-    # the folded pattern stays bounded; folding everything raises loudly
-    assert len(_build_pattern(folded)) < 4 * GATE_FOLD_MAX_CHARS
-    import pytest
-
-    with pytest.raises(ValueError, match="semi-join"):
-        _build_pattern(tuple(sorted(terms)))
-
-
-def test_gate_overflow_vocab_equivalence(spark):
-    """A 50k-variant labeled vocabulary: the gate folds only a bounded
-    prefix into the pattern; overflow surfaces are recovered by the
-    broadcast token semi-join. Output must equal the ungated run for
-    mentions whose ONLY signal is an overflow variant."""
-    vocab = _big_vocab()
-    av = spark.createDataFrame(vocab, "variant string, area string")
-    first_v = vocab[0][0]        # sorts first → folded into the pattern
-    last_v, last_a = vocab[-1]   # sorts last → overflow (semi-join path)
-    pages = _page_df(spark, [
-        ("p://folded", f"prose text, {first_v}, more prose"),
-        ("p://overflow", f"prose text, {last_v}, more prose"),
-        ("p://prose", "the committee adjourned early without incident"),
-    ])
-    rows = {}
-    for gate in (True, False):
-        plan = LinkagePlan(spark, gate=gate, area_vocab=av)
-        folded, overflow = plan._gate_terms()
-        if gate:
-            assert overflow and first_v in folded and last_v in overflow
-        rows[gate] = sorted(
-            (r["url"], r["area"])
-            for r in plan.extract(pages).select("url", "area").collect()
-        )
-        if gate:
-            m = plan.metrics() if plan.gate_stats is None else None
-            stats = plan.gate_stats
-            assert stats["unique_mentions"] >= 3
-            # only the pure-prose page is skipped
-            assert stats["gate_skipped"] == 1, (stats, m)
-    assert rows[True] == rows[False]
-    got = dict(rows[True])
-    assert got["p://overflow"] == last_a

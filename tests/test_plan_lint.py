@@ -239,23 +239,16 @@ def test_oracle_integral_columns_fetch_as_integers(frames, sf_dir):
 def test_constant_frames_plan_as_local_relation(spark, tmp_path):
     """Every frame the package builds from Python constants (the 8
     gazetteer/geo dims, the surface dictionary, the area prefix table,
-    the gate's overflow vocabulary, the empty edge table) must plan as
-    a JVM LocalRelation: scanning or broadcasting it then starts no
-    Python worker."""
+    the empty edge table) must plan as a JVM LocalRelation: scanning or
+    broadcasting it then starts no Python worker."""
     from ai_bangladesh_address_parser_spark.data import gazetteer as gz
     from ai_bangladesh_address_parser_spark.data import geo_hierarchy as gh
     from ai_bangladesh_address_parser_spark.plans.incremental import IncrementalLinker
-    from ai_bangladesh_address_parser_spark.plans.pipeline import LinkagePlan
 
     frames = {f.__name__: f(spark) for f in (
         gz.district_division_df, gz.district_variants_df, gz.areas_df,
         gz.area_variants_df, gz.postal_codes_df, gz.surface_df, gz.area_prefix_df,
         gh.upazilas_df, gh.unions_df, gh.villages_df)}
-    plan = LinkagePlan(spark)
-    plan._gate_extra = ((), ("qxzoverflow",))  # force the semi-join path
-    frames["overflow_vocab"] = plan._apply_gate(
-        gz.local_df(spark, [("m1", "prose")], "mention_id string, normalized string"),
-        "mention_id")
     linker = IncrementalLinker(spark, str(tmp_path))
     linker.version = 1  # committed version with no edge table
     frames["empty_edges"] = linker.edges()
