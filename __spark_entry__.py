@@ -110,7 +110,7 @@ def entry(spark: SparkSession) -> DataFrame:
     Returns the entities table: one row per page with resolved address
     components and a transitive ``entity_id``.
     """
-    from ai_bangladesh_address_parser_spark.plans.pipeline import link_pages
+    from ai_bangladesh_address_parser_spark.plans.pipeline import LinkagePlan
     from ai_bangladesh_address_parser_spark.sources.pages import synth_pages
 
     # Cap task concurrency so the smoke also fits a default-heap (1g)
@@ -130,7 +130,7 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     # use_minhash=False: the smoke corpus always yields a postal or
     # district key; full three-key blocking runs in bench.py + tests.
-    return link_pages(spark, pages.unionByName(neg), use_minhash=False)
+    return LinkagePlan(spark, use_minhash=False).run(pages.unionByName(neg))
 
 
 # ---------------------------------------------------------------------------

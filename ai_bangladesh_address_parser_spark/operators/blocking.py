@@ -28,6 +28,10 @@ MINHASH_SEEDS = 12  # k minhashes
 MINHASH_BANDS = 4   # b bands of r = k/b rows each
 HOT_BLOCK_CAP = 1000   # blocks larger than this get salted
 SALT_BUCKETS = 8
+# blocks whose total membership exceeds this never generate pairs
+# (candidate_pairs drops them) — the one default cap of the batch plan
+# and the incremental linker
+MAX_BLOCK = 100_000
 
 
 def minhash_tokens_expr(text_col: str):
@@ -308,7 +312,7 @@ def candidate_pairs(
     keys: DataFrame,
     hot_cap: int = HOT_BLOCK_CAP,
     salt_buckets: int = SALT_BUCKETS,
-    max_block: int | None = 100_000,
+    max_block: int | None = MAX_BLOCK,
 ) -> DataFrame:
     """Within-block self-join → distinct (id_a, id_b), id_a < id_b.
 

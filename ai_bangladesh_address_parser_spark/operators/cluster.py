@@ -18,7 +18,7 @@ Convergence: edge multiset stable (checked via count + xor-ish hash
 aggregate — two cheap scalars, no expensive except()). ``localCheckpoint``
 every iteration cuts the lineage so plans stay O(1) per round; on a
 cluster with an Iceberg catalog the same hook writes a snapshot table
-instead (resumability path, see plans.checkpoint).
+instead (resumability path, see plans.pipeline.StageStore).
 """
 
 from __future__ import annotations
@@ -143,16 +143,23 @@ def entity_profiles(
     return out.select(id_col, *components, "n_members")
 
 
+def label_entities(nodes: DataFrame, cc: DataFrame, id_col: str = "mention_id") -> DataFrame:
+    """Attach ``entity_id`` to every row of ``nodes`` from a
+    :func:`connected_components` result ``cc``: the component root for
+    clustered ids, the row's own id for singletons."""
+    return (
+        nodes.join(cc.withColumnRenamed("node", id_col), id_col, "left")
+        .withColumn("entity_id", F.coalesce(F.col("component"), F.col(id_col)))
+        .drop("component")
+    )
+
+
 def assign_entity_ids(
     mentions: DataFrame,
     match_edges: DataFrame,
     id_col: str = "mention_id",
 ) -> DataFrame:
-    """Attach ``entity_id`` to every mention: the component root for
-    matched mentions, the mention's own id for singletons."""
-    cc = connected_components(match_edges, "id_a", "id_b")
-    return (
-        mentions.join(cc.withColumnRenamed("node", id_col), id_col, "left")
-        .withColumn("entity_id", F.coalesce(F.col("component"), F.col(id_col)))
-        .drop("component")
-    )
+    """Cluster ``match_edges`` and label every mention (see
+    :func:`label_entities`)."""
+    return label_entities(
+        mentions, connected_components(match_edges, "id_a", "id_b"), id_col)

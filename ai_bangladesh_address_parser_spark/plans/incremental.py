@@ -15,7 +15,7 @@ re-link per arriving WARC dump is not a plan; the production shape is:
        new × old   — one equi-join of the new keys against the STORED
                      block-key index (the old × old pairs were already
                      scored in the batches that created them);
-  4. SCORE those pairs exactly like the batch scorer;
+  4. SCORE those pairs with the batch plan's own ``LinkagePlan.score``;
   5. CLUSTER only the delta: connected components over the new match
      edges plus the membership star-edges (member → entity_id) of the
      TOUCHED old entities. Untouched components never enter the join.
@@ -105,18 +105,13 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..data.gazetteer import local_df
-from ..operators.blocking import candidate_pairs
-from ..operators.cluster import connected_components
-from ..operators.scoring import attach_pair_components, score_pairs
+from ..operators.blocking import MAX_BLOCK, candidate_pairs
+from ..operators.cluster import connected_components, label_entities
+from ..reference_semantics import MATCH_THRESHOLD
 from .pipeline import LinkagePlan
-
-# blocks whose TOTAL size (stored + delta) exceeds this never pair —
-# the incremental twin of candidate_pairs(max_block=...), applied over
-# the union AND retroactively (see module docstring) so the pair set
-# equals the one-shot batch run's at every version
-MAX_BLOCK = 100_000
 
 _EDGE_SCHEMA = "id_a string, id_b string"
 
@@ -139,7 +134,7 @@ class IncrementalLinker:
         spark: SparkSession,
         base_dir: str,
         scorer: str = "levenshtein",
-        threshold: float = 0.85,
+        threshold: float = MATCH_THRESHOLD,
         use_minhash: bool = True,
         gate: bool = True,
         max_block: int = MAX_BLOCK,
@@ -216,6 +211,18 @@ class IncrementalLinker:
         paths = self._batch_paths(table)
         return self.spark.read.parquet(*paths) if paths else None
 
+    @staticmethod
+    def _latest_per_key(deltas: DataFrame) -> DataFrame:
+        """Latest-_v-wins per norm_key over node delta rows (``_v``
+        kept): the one resolution rule of :meth:`nodes` and
+        :meth:`compact`."""
+        w = Window.partitionBy("norm_key").orderBy(F.col("_v").desc())
+        return (
+            deltas.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
     def nodes(self) -> DataFrame | None:
         """Current node table (norm_key-unique, with entity_id),
         resolved from the append-only deltas as latest-_v-wins per
@@ -224,15 +231,8 @@ class IncrementalLinker:
         Iceberg deployment gets this for free from MERGE INTO)."""
         if self.version == 0:
             return None
-        from pyspark.sql.window import Window
-
         df = self.spark.read.parquet(*self._batch_paths("nodes", prefix="d"))
-        w = Window.partitionBy("norm_key").orderBy(F.col("_v").desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_v")
-        )
+        return self._latest_per_key(df).drop("_v")
 
     def edges(self) -> DataFrame | None:
         """Current surviving match-edge table (id_a, id_b)."""
@@ -294,8 +294,6 @@ class IncrementalLinker:
         retried) finishes the sweep. Idempotent per version."""
         if self.version == 0:
             return
-        from pyspark.sql.window import Window
-
         for table, prefix in (("keys", "b"), ("mentions", "b"), ("nodes", "d")):
             paths = self._batch_paths(table, prefix)
             if not paths:
@@ -307,12 +305,7 @@ class IncrementalLinker:
                 # finishes (with _SUCCESS) before anything is deleted
                 df = self.spark.read.parquet(*paths)
                 if table == "nodes":
-                    w = Window.partitionBy("norm_key").orderBy(
-                        F.col("_v").desc())
-                    df = (
-                        df.withColumn("_rn", F.row_number().over(w))
-                        .filter(F.col("_rn") == 1).drop("_rn")
-                    )
+                    df = self._latest_per_key(df)
                 df.write.mode("errorifexists").parquet(cpath)
             self._sweep_superseded(table, prefix)
 
@@ -442,25 +435,8 @@ class IncrementalLinker:
             new_nodes if old_nodes is None
             else old_nodes.drop("entity_id").unionByName(new_nodes)
         )
-        scored = score_pairs(
-            attach_pair_components(pairs, all_nodes, id_col="norm_key"),
-            scorer=self.scorer,
-            threshold=self.threshold,
-        )
-        # Materialize (id_a, id_b, is_match) BEFORE filtering. A
-        # filter placed directly over the component join gets pushed
-        # into the join condition by Catalyst, embedding the full
-        # 9-component score expression there — and a join condition,
-        # unlike a projection, cannot be split across generated
-        # methods, so Janino's 64 KB method limit trips and the whole
-        # scoring plan falls back to interpreted evaluation. Scoring
-        # in a projection (splittable codegen) and filtering after the
-        # lineage cut keeps the hot path fused; the checkpoint was
-        # already here, it just moves one operator earlier.
-        scored = scored.select("id_a", "id_b", "is_match").localCheckpoint(
-            eager=True
-        )
-        edges = scored.filter(F.col("is_match")).select("id_a", "id_b")
+        edges = plan.score(pairs, all_nodes, id_col="norm_key").select(
+            "id_a", "id_b")
 
         # entities needing re-clustering: TOUCHED by a new edge, or
         # AFFECTED by retroactive edge removal (those components may
@@ -512,25 +488,17 @@ class IncrementalLinker:
             redo_members = None
             cc_edges = edges
 
-        cc = connected_components(cc_edges, "id_a", "id_b").withColumnRenamed(
-            "node", "norm_key")
-
-        def label(nodes_df: DataFrame) -> DataFrame:
-            return (
-                nodes_df.join(cc, "norm_key", "left")
-                .withColumn("entity_id",
-                            F.coalesce(F.col("component"), F.col("norm_key")))
-                .drop("component")
-            )
+        cc = connected_components(cc_edges, "id_a", "id_b")
 
         # the node DELTA: rows this batch ADDED (new nodes) or RELABELED
         # (members of touched/affected entities — exactly the keys whose
         # entity_id may have changed). Untouched rows are NOT rewritten;
         # reads resolve latest-_v-wins per norm_key, so batch write I/O
         # is O(delta + touched), never O(accumulated corpus).
-        new_labeled = label(new_nodes)
+        new_labeled = label_entities(new_nodes, cc, "norm_key")
         if redo_members is not None:
-            relabeled = label(redo_members.drop("entity_id"))
+            relabeled = label_entities(
+                redo_members.drop("entity_id"), cc, "norm_key")
             nodes_delta = relabeled.unionByName(new_labeled)
         else:
             nodes_delta = new_labeled

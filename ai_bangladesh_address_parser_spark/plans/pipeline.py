@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.normalize import norm_key_expr, normalize_expr
 from ..functions.signal import address_signal_expr
 from ..operators.blocking import (
+    MAX_BLOCK,
     blocking_keys,
     candidate_pairs,
     expansion_repartition,
@@ -41,7 +42,7 @@ from ..operators.cluster import assign_entity_ids
 from ..operators.extract import DEFAULT_STAGES, PROFILES, extract_evidence
 from ..operators.resolve import resolve_evidence, resolved_wide
 from ..operators.scoring import attach_pair_components, score_pairs
-from ..reference_semantics import ALL_COMPONENTS
+from ..reference_semantics import ALL_COMPONENTS, MATCH_THRESHOLD
 
 # Mention harvesting: pull the address-looking spans out of the page
 # text. Anchored on the address-start keywords the reference's pattern
@@ -206,12 +207,12 @@ class LinkagePlan:
         self,
         spark: SparkSession,
         scorer: str = "levenshtein",
-        threshold: float = 0.85,
+        threshold: float = MATCH_THRESHOLD,
         store: StageStore | None = None,
         use_minhash: bool = True,
         profile: str | None = None,
         gate: bool = True,
-        max_block: int | None = 100_000,
+        max_block: int | None = MAX_BLOCK,
     ):
         self.spark = spark
         self.scorer = scorer
@@ -355,12 +356,28 @@ class LinkagePlan:
     # -- S3 ---------------------------------------------------------------
     def score(self, pairs: DataFrame, nodes: DataFrame,
               id_col: str = "mention_id") -> DataFrame:
+        """Candidate pairs → match edges ``(id_a, id_b, score)``: the one
+        match rule, shared by :meth:`run` and the incremental linker's
+        ``link_batch``.
+
+        The score is computed in a projection and the lineage is cut
+        BEFORE the ``is_match`` filter. A filter placed directly over the
+        component joins is pushed into the join condition by Catalyst,
+        embedding the full 9-component score expression there; a join
+        condition, unlike a projection, cannot be split across generated
+        methods, so Janino's 64 KB method limit can trip and the whole
+        scoring plan falls back to interpreted evaluation
+        (BENCH_HISTORY.md, "Incremental scoring: codegen fallback found
+        and fixed"). The cut is eager, so it is skipped when the stage
+        resumes from its stored snapshot."""
         scored = score_pairs(
             attach_pair_components(pairs, nodes, id_col=id_col),
             scorer=self.scorer,
             threshold=self.threshold,
-        )
-        edges = scored.filter(F.col("is_match")).select("id_a", "id_b", "score")
+        ).select("id_a", "id_b", "score", "is_match")
+        if not self.store.will_resume(self.spark, "s3_match_edges"):
+            scored = scored.localCheckpoint(eager=True)
+        edges = scored.filter(F.col("is_match")).drop("is_match")
         return self.store.through(self.spark, "s3_match_edges", edges)
 
     # -- S4 ---------------------------------------------------------------
@@ -392,22 +409,6 @@ class LinkagePlan:
         if self.gate_stats is not None:
             out["s1_gate"] = self.gate_stats
         return out
-
-
-def link_pages(
-    spark: SparkSession,
-    pages: DataFrame,
-    scorer: str = "levenshtein",
-    threshold: float = 0.85,
-    checkpoint_dir: str | None = None,
-    resume: bool = True,
-    use_minhash: bool = True,
-) -> DataFrame:
-    """One-call convenience wrapper over :class:`LinkagePlan`."""
-    store = StageStore(base=checkpoint_dir, resume=resume)
-    return LinkagePlan(
-        spark, scorer=scorer, threshold=threshold, store=store, use_minhash=use_minhash
-    ).run(pages)
 
 
 def _contingency(entities: DataFrame, truth: DataFrame) -> DataFrame:

@@ -46,12 +46,12 @@ def test_with_text_from_html_pipeline_equivalence(spark):
     original text-populated run — the per-url invariant extended to the
     html path. synth_pages wraps text as <html><body>text</body></html>
     so the strip chain must round-trip it byte-identically."""
-    from ai_bangladesh_address_parser_spark.plans.pipeline import link_pages
+    from ai_bangladesh_address_parser_spark.plans.pipeline import LinkagePlan
     from ai_bangladesh_address_parser_spark.sources.pages import synth_pages
 
     pages, _ = synth_pages(spark, n_pages=120, n_entities=30)
     base = {(r.url, r.entity_id)
-            for r in link_pages(spark, pages).select("url", "entity_id").collect()}
+            for r in LinkagePlan(spark).run(pages).select("url", "entity_id").collect()}
 
     html_only = pages.withColumn("text", F.lit(None).cast("string"))
     adapted = with_text_from_html(html_only)
@@ -60,7 +60,7 @@ def test_with_text_from_html_pipeline_equivalence(spark):
     got = {r.url: r.text for r in adapted.collect()}
     assert got == orig
     via_html = {(r.url, r.entity_id)
-                for r in link_pages(spark, adapted).select("url", "entity_id").collect()}
+                for r in LinkagePlan(spark).run(adapted).select("url", "entity_id").collect()}
     assert via_html == base
 
     # mixed corpus: populated text rows keep their bytes untouched

@@ -120,7 +120,26 @@ def test_linkage_end_to_end(spark, sf_dir, tmp_path):
     # resume path: a second job over the same store reuses every stage
     # and produces identical entity assignments (determinism)
     plan2 = LinkagePlan(spark, store=StageStore(base=str(tmp_path / "ckpt"), job_id="t2"))
-    ents2 = plan2.run(corpus)
+    # the run's stages one by one, so the resumed score alone can be
+    # wrapped in a job group: on a store hit it skips its eager lineage
+    # cut and runs only the stored stage's read (at most one job, the
+    # parquet schema inference), not the scoring joins. The lazy cuts
+    # of the frames it reads run jobs at build time, so those come first
+    wide2 = plan2.extract(corpus)
+    nodes2 = plan2.unique_mentions(wide2)
+    pairs2 = plan2.block(nodes2, id_col="norm_key")
+    sc = spark.sparkContext
+    sc.setJobGroup("resumed-score", "LinkagePlan.score on a store hit")
+    try:
+        edges2 = plan2.score(pairs2, nodes2, id_col="norm_key")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [tracker.getStageInfo(s).name
+              for j in tracker.getJobIdsForGroup("resumed-score")
+              for s in tracker.getJobInfo(j).stageIds]
+    assert len(stages) <= 1 and all(n.startswith("parquet at") for n in stages), stages
+    ents2 = plan2.cluster(wide2, edges2, id_col="norm_key")
     ids1 = {r.mention_id: r.entity_id for r in ents.collect()}
     ids2 = {r.mention_id: r.entity_id for r in ents2.collect()}
     assert ids1 == ids2

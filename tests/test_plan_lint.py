@@ -14,6 +14,7 @@ cheap (~seconds) and runs over every oracled driver query.
 import glob
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -257,3 +258,52 @@ def test_constant_frames_plan_as_local_relation(spark, tmp_path):
         kinds = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
         assert kinds == {"LocalRelation"}, f"{name}: plan leaves {kinds}"
 
+
+
+# --- S3 keeps the match score out of join conditions -------------------------
+
+def test_score_cuts_hold_no_similarity_in_join_condition(spark, monkeypatch):
+    """No frame ``LinkagePlan.score`` cuts lineage on may carry a
+    similarity function in a join condition. A filter on ``is_match``
+    over the component joins is pushed into the join condition, where
+    the 9-component score expression cannot be split across generated
+    methods and can trip Janino's 64 KB limit; the score must stay in a
+    projection until after a cut. Small hand-built frames: no
+    extraction runs."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from ai_bangladesh_address_parser_spark.data.gazetteer import local_df
+    from ai_bangladesh_address_parser_spark.plans.pipeline import LinkagePlan
+    from ai_bangladesh_address_parser_spark.reference_semantics import ALL_COMPONENTS
+
+    nodes = local_df(
+        spark,
+        [(k, *[c if k[0] == "a" else "9999" for c in ALL_COMPONENTS])
+         for k in ("a1", "a2", "b1")],
+        ", ".join(["norm_key string"] + [f"{c} string" for c in ALL_COMPONENTS]),
+    )
+    pairs = local_df(spark, [("a1", "a2"), ("a1", "b1"), ("a2", "b1")],
+                     "id_a string, id_b string")
+    cut_plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording_checkpoint(df, *args, **kwargs):
+        cut_plans.append(df._jdf.queryExecution().optimizedPlan())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording_checkpoint)
+    edges = LinkagePlan(spark).score(pairs, nodes, id_col="norm_key")
+    assert {(r.id_a, r.id_b) for r in edges.collect()} == {("a1", "a2")}
+    assert cut_plans
+    offenders = []
+    for plan in cut_plans:
+        stack = [plan]
+        while stack:
+            node = stack.pop()
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+            if node.getClass().getSimpleName() == "Join":
+                cond = node.condition().toString()
+                if re.search(r"levenshtein|difflib|jaro", cond):
+                    offenders.append(cond[:200])
+    assert not offenders, offenders
